@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from naru_spark.estimators.base import CardEst
 from naru_spark.meta import TableMeta
-from naru_spark.model.binning import ModelBinning
+from naru_spark.model.binning import ModelBinning, predicate_masks
+from naru_spark.model.made import sample_step
 from naru_spark.predicates import Query
 
 
@@ -493,14 +494,6 @@ class BayesNet(CardEst):
         )
         return self
 
-    def _masks(self, q: Query) -> list[np.ndarray | None]:
-        masks: list[np.ndarray | None] = [None] * len(self.columns)
-        for c, op, v in zip(q.cols, q.ops, q.vals):
-            i = self.columns.index(c)
-            m = self.binnings[c].predicate_mask(op, v)
-            masks[i] = m if masks[i] is None else masks[i] * m
-        return masks
-
     def query_exact(self, q: Query) -> float:
         return float(np.ceil(self._sel_exact_ie(q) * self.meta.cardinality))
 
@@ -531,7 +524,7 @@ class BayesNet(CardEst):
             # non-root's message would silently drop its mask factor —
             # so anything else goes through generic VE
             return self._sel_exact_ve(q)
-        masks = self._masks(q)
+        masks = predicate_masks(q, self.columns, self.binnings)
         children: dict[int, list[int]] = {}
         for u, v in self.edges:
             children.setdefault(u, []).append(v)
@@ -562,7 +555,7 @@ class BayesNet(CardEst):
         while min-fill keeps induced factors near the treewidth bound
         when hub variables would blow reverse-topo up at
         max_parents >= 3."""
-        masks = self._masks(q)
+        masks = predicate_masks(q, self.columns, self.binnings)
         # Barren-node pruning (the reference engine's own rule: pgmpy's
         # VariableElimination prunes leaf nodes outside query∪evidence
         # before eliminating): P(mask) marginalizes every node OUTSIDE the
@@ -657,8 +650,8 @@ class BayesNet(CardEst):
     def query(self, q) -> float:
         """Disjunctions (predicates.DisjunctiveQuery) expand by
         inclusion-exclusion into conjunctive terms — each term reuses the
-        per-column mask-product machinery (_masks intersects repeated
-        columns), selectivities combine BEFORE the final ceil."""
+        per-column mask-product machinery (predicate_masks intersects
+        repeated columns), selectivities combine BEFORE the final ceil."""
         from naru_spark.predicates import ie_terms
 
         if self.inference == "exact":
@@ -670,7 +663,7 @@ class BayesNet(CardEst):
         rng = np.random.RandomState(self.seed)
         S = self.num_samples
         D = len(self.columns)
-        masks = self._masks(q)
+        masks = predicate_masks(q, self.columns, self.binnings)
 
         samples = np.zeros((S, D), dtype=np.int64)
         p = np.ones(S, dtype=np.float64)
@@ -680,18 +673,5 @@ class BayesNet(CardEst):
                 probs = np.tile(self.cpd[v][None, :], (S, 1))
             else:
                 probs = self.cpd[v][tuple(samples[:, p] for p in ps)]
-            mask = masks[v]
-            if mask is not None:
-                masked = probs * mask[None, :]
-                s = masked.sum(axis=1)
-                p *= s
-                safe = np.where(s > 0, s, 1.0)
-                dist = masked / safe[:, None]
-                dist[s <= 0] = 0
-                dist[s <= 0, 0] = 1.0
-            else:
-                dist = probs
-            cum = dist.cumsum(axis=1)
-            u = rng.rand(S, 1)
-            samples[:, v] = np.minimum((u > cum).sum(axis=1), dist.shape[1] - 1)
+            samples[:, v] = sample_step(probs, masks[v], p, rng)
         return float(p.mean())

@@ -1,11 +1,21 @@
 """ProgressiveSampling — the reference's core estimator (B4), numpy edition.
 
-Reference ``estimators.py:134-418``: per column in model order, softmax the
-column's logits, multiply by the predicate's valid-bin vector, sum -> the
-conditional selectivity of that predicate given the sampled prefix;
-renormalize, multinomial-sample the next value, write its encoding into the
-input buffer, forward again. Estimate = mean over samples of the product of
-per-column masked sums x cardinality (estimators.py:356-363).
+One walk answers every query (``ProgressiveSampling._walk``, reference
+``estimators.py:134-418``). For each column in the model's ordering it takes
+the column's softmax given the sampled prefix and hands it to the shared
+sampling step (``model.made.sample_step``): multiply by the predicate's
+model-bin mask (``model.binning.predicate_masks``), multiply each path's
+weight by the masked mass, renormalize, draw the next value, write its
+encoding into the input buffer and forward again. Estimate = mean over
+samples of the path weights x cardinality (estimators.py:356-363).
+
+- Conjunctions and disjunctions share the walk: a disjunction expands by
+  inclusion-exclusion (``predicates.ie_terms``) into conjunctive terms whose
+  selectivities are summed before the final ceil.
+- ``query_weighted`` ends the walk at its weight column with E[w | prefix]
+  folded into the path weights instead of a draw.
+- ``SampleFromModel`` and ``BayesNet`` reuse the same mask builder and
+  sampling step.
 
 Reference parity notes:
 - wildcard short-circuit (estimators.py:238-255) is implemented: models
@@ -28,8 +38,10 @@ from __future__ import annotations
 import numpy as np
 
 from naru_spark.estimators.base import CardEst
+from naru_spark.model.binning import predicate_masks
+from naru_spark.model.made import sample_step, softmax
 from naru_spark.model.train import NaruModel
-from naru_spark.predicates import Query
+from naru_spark.predicates import Query, ie_terms
 
 
 class ProgressiveSampling(CardEst):
@@ -52,15 +64,6 @@ class ProgressiveSampling(CardEst):
         self.order = list(order) if order is not None else None
         self.name = f"psample_{num_samples}"
 
-    def _masks(self, q: Query) -> list[np.ndarray | None]:
-        """Per-column fractional model-bin masks; None for wildcards."""
-        masks: list[np.ndarray | None] = [None] * len(self.model.columns)
-        for c, op, v in zip(q.cols, q.ops, q.vals):
-            i = self.model.columns.index(c)
-            m = self.model.binnings[c].predicate_mask(op, v)
-            masks[i] = m if masks[i] is None else masks[i] * m
-        return masks
-
     def query(self, q: Query) -> float:
         made = self.model.made
         prev_order = None
@@ -72,27 +75,15 @@ class ProgressiveSampling(CardEst):
             prev_order = list(made.order)
             made.update_order(self.order)
         try:
-            from naru_spark.predicates import DisjunctiveQuery, ie_terms
-
-            if isinstance(q, DisjunctiveQuery):
-                # OR of conjunctions by inclusion-exclusion: each term is
-                # conjunctive (branch predicates concatenated — repeated
-                # columns INTERSECT via _masks' mask product), so the whole
-                # disjunction is 2^k - 1 runs of the conjunctive sampler.
-                # Selectivities combine BEFORE the final ceil.
-                sel = sum(
-                    coef * self._sel_pinned(t) for coef, t in ie_terms(q)
-                )
-                sel = min(max(sel, 0.0), 1.0)
-                return float(np.ceil(sel * self.model.meta.cardinality))
-            return self._query_pinned(q)
+            # a conjunctive query is its own single term; an OR of k
+            # conjunctions is 2^k - 1 walks whose selectivities combine
+            # BEFORE the final ceil
+            sel = sum(coef * self._walk(t) for coef, t in ie_terms(q))
+            sel = min(max(sel, 0.0), 1.0)
+            return float(np.ceil(sel * self.model.meta.cardinality))
         finally:
             if prev_order is not None:
                 made.update_order(prev_order)
-
-    def _query_pinned(self, q: Query) -> float:
-        sel = self._sel_pinned(q)
-        return float(np.ceil(sel * self.model.meta.cardinality))
 
     def query_weighted(self, q: Query, weight_col: str, weight_values) -> float:
         """NeuroCard-style weighted expectation over the model:
@@ -113,53 +104,40 @@ class ProgressiveSampling(CardEst):
         Σ_v P(v | prefix) w(v), and nothing samples after it — putting it
         earlier would require integrating the rest of the chain over v.
         The column must also be unfiltered in ``q``."""
-        made = self.model.made
-        cols = self.model.columns
-        wi = cols.index(weight_col)
-        assert made.order[-1] == wi, "weight column must be last in the ordering"
+        wi = self.model.columns.index(weight_col)
+        assert self.model.made.order[-1] == wi, "weight column must be last in the ordering"
         assert weight_col not in q.cols, "weight column must be unfiltered"
-        w_vec = np.asarray(weight_values, dtype=np.float64)
+        sel = self._walk(q, (wi, np.asarray(weight_values, dtype=np.float64)))
+        return float(np.ceil(sel * self.model.meta.cardinality))
 
+    def _walk(self, q: Query, weight: tuple[int, np.ndarray] | None = None) -> float:
+        """Mean path weight of ``num_samples`` progressive samples of the
+        conjunctive ``q``. ``weight = (column, per-bin weights)`` ends the
+        walk at that column, folding E[w | prefix] into each path."""
         rng = np.random.RandomState(self.seed)
+        made = self.model.made
         S = self.num_samples
-        masks = self._masks(q)
+        masks = predicate_masks(q, self.model.columns, self.model.binnings)
+        wi = weight[0] if weight is not None else None
+
         made.begin_sampling(S)
         bits = made.new_input_buffer(S)
         p = np.ones(S, dtype=np.float64)
-        use_fast = hasattr(made, "sample_logits_for_col")
+        # the model's ordering (reference estimators.py:370-389)
         for c in made.order:
-            is_weight = c == wi
-            if not is_weight and masks[c] is None and made.column_masking:
+            if masks[c] is None and made.column_masking and c != wi:
+                # wildcard short-circuit (estimators.py:238-255): the model
+                # was trained with masked inputs, so writing the MASK token
+                # and skipping this column's forward + sampling is sound —
+                # forwards per query = #filtered columns, not #columns.
                 made.write_mask_token(bits, c)
                 continue
-            if use_fast:
-                lg = made.sample_logits_for_col(c, bits)
-            else:
-                h = made.hidden_nograd(bits)
-                lg = made.logits_for_col(c, h)
-            mx = lg.max(axis=1, keepdims=True)
-            probs = np.exp(lg - mx)
-            probs /= probs.sum(axis=1, keepdims=True)
-            if is_weight:
-                # last column: fold in E[w | prefix]; no further sampling
-                p *= probs @ w_vec
+            probs = softmax(made.sample_logits_for_col(c, bits))
+            if c == wi:
+                p *= probs @ weight[1]
                 break
-            mask = masks[c]
-            if mask is not None:
-                masked = probs * mask[None, :]
-                s = masked.sum(axis=1)
-                p *= s
-                safe = np.where(s > 0, s, 1.0)
-                dist = masked / safe[:, None]
-                dist[s <= 0] = 0
-                dist[s <= 0, 0] = 1.0
-            else:
-                dist = probs
-            cum = dist.cumsum(axis=1)
-            u = rng.rand(S, 1)
-            choice = np.minimum((u > cum).sum(axis=1), dist.shape[1] - 1)
-            made._write_bits(bits, c, choice)
-        return float(np.ceil(p.mean() * self.model.meta.cardinality))
+            made._write_bits(bits, c, sample_step(probs, masks[c], p, rng))
+        return float(p.mean())
 
     def query_batch(self, queries: list[Query], threads: int | None = None):
         """THREADED batch scoring on one node (the reference evaluates its
@@ -207,55 +185,6 @@ class ProgressiveSampling(CardEst):
         with ThreadPoolExecutor(max_workers=n) as ex:
             list(ex.map(run, range(n)))
         return results
-
-    def _sel_pinned(self, q: Query) -> float:
-        rng = np.random.RandomState(self.seed)
-        made = self.model.made
-        S = self.num_samples
-        masks = self._masks(q)
-
-        made.begin_sampling(S)
-        bits = made.new_input_buffer(S)
-        p = np.ones(S, dtype=np.float64)
-        # incremental decode (transformer KV-cache path) when the model
-        # offers it — the reference's EncodeInputInference idea
-        # (transformer.py:495-530), extended to per-block K/V caches
-        use_fast = hasattr(made, "sample_logits_for_col")
-        # resolve the variable ordering from the model (reference
-        # estimators.py:370-389) — natural for default models
-        for c in made.order:
-            if masks[c] is None and made.column_masking:
-                # wildcard short-circuit (estimators.py:238-255): the model
-                # was trained with masked inputs, so writing the MASK token
-                # and skipping this column's forward + sampling is sound —
-                # forwards per query = #filtered columns, not #columns.
-                made.write_mask_token(bits, c)
-                continue
-            if use_fast:
-                lg = made.sample_logits_for_col(c, bits)
-            else:
-                h = made.hidden_nograd(bits)
-                lg = made.logits_for_col(c, h)
-            mx = lg.max(axis=1, keepdims=True)
-            probs = np.exp(lg - mx)
-            probs /= probs.sum(axis=1, keepdims=True)
-            mask = masks[c]
-            if mask is not None:
-                masked = probs * mask[None, :]
-                s = masked.sum(axis=1)
-                p *= s
-                # guard vanished paths (estimators.py:278-279)
-                safe = np.where(s > 0, s, 1.0)
-                dist = masked / safe[:, None]
-                dist[s <= 0] = 0
-                dist[s <= 0, 0] = 1.0
-            else:
-                dist = probs
-            cum = dist.cumsum(axis=1)
-            u = rng.rand(S, 1)
-            choice = np.minimum((u > cum).sum(axis=1), dist.shape[1] - 1)
-            made._write_bits(bits, c, choice)
-        return float(p.mean())
 
     # ------------------------------------------------------- batch scoring
     def estimate_batch(
@@ -358,13 +287,11 @@ class SampleFromModel(CardEst):
         self._samples = self.model.made.sample(num_samples, self.rng)
 
     def query(self, q: Query) -> float:
-        from naru_spark.predicates import ie_terms
-
         # inclusion-exclusion handles DisjunctiveQuery; conjunctive input
         # is its own single term with coefficient 1
         frac = 0.0
         for coef, t in ie_terms(q):
-            masks = ProgressiveSampling(self.model)._masks(t)
+            masks = predicate_masks(t, self.model.columns, self.model.binnings)
             keep = np.ones(self.num_samples, dtype=np.float64)
             for i, m in enumerate(masks):
                 if m is not None:

@@ -15,6 +15,8 @@ Semantics:
   assumption inside a bucket (same as MaxDiff, estimators.py:1342-1374),
   which is exact for bins fully inside/outside the range and approximate
   only at the two boundary bins.
+- ``predicate_masks`` turns a conjunctive query into one such mask per model
+  column (None = wildcard); repeated columns intersect by mask product.
 """
 
 from __future__ import annotations
@@ -66,3 +68,15 @@ class ModelBinning:
         """Fractional model-bin mask for ``col <op> val`` (NULL bin = 0)."""
         raw = self.dictionary.valid_bins_mask(op, val)
         return self.fractional_mask(raw)
+
+
+def predicate_masks(q, columns: list[str], binnings: dict[str, ModelBinning]) -> list:
+    """Per-column fractional model-bin masks of conjunctive query ``q``,
+    aligned to ``columns``; None for unfiltered (wildcard) columns. Several
+    predicates on one column INTERSECT by mask product."""
+    masks: list[np.ndarray | None] = [None] * len(columns)
+    for c, op, v in zip(q.cols, q.ops, q.vals):
+        i = columns.index(c)
+        m = binnings[c].predicate_mask(op, v)
+        masks[i] = m if masks[i] is None else masks[i] * m
+    return masks

@@ -29,6 +29,39 @@ def _relu(x):
     return np.maximum(x, 0.0)
 
 
+def softmax(lg: np.ndarray) -> np.ndarray:
+    """Row-wise softmax of one column's [S, domain] logits, in their dtype."""
+    probs = np.exp(lg - lg.max(axis=1, keepdims=True))
+    probs /= probs.sum(axis=1, keepdims=True)
+    return probs
+
+
+def sample_step(
+    probs: np.ndarray,
+    mask: np.ndarray | None,
+    p: np.ndarray | None,
+    rng: np.random.RandomState,
+) -> np.ndarray:
+    """One progressive-sampling step over S rows of one column's
+    distribution ``probs``: fold in the predicate's model-bin ``mask``
+    (None = unfiltered, ``p`` untouched), multiply each row's path weight
+    ``p`` in place by its masked mass, renormalize and draw one bin per row.
+    A vanished path (mass 0, weight already 0) draws bin 0 (reference
+    estimators.py:278-279); a draw past a cumsum that rounds below 1 is
+    clipped to the last bin."""
+    if mask is not None:
+        masked = probs * mask[None, :]
+        s = masked.sum(axis=1)
+        p *= s
+        safe = np.where(s > 0, s, 1.0)
+        probs = masked / safe[:, None]
+        probs[s <= 0] = 0
+        probs[s <= 0, 0] = 1.0
+    cum = probs.cumsum(axis=1)
+    u = rng.rand(len(probs), 1)
+    return np.minimum((u > cum).sum(axis=1), probs.shape[1] - 1)
+
+
 class MaskedLinear:
     """y = x @ (W*M) + b with cached masked weight (reference made.py:11-28
     caches mask-multiplied weights for inference: same trick here)."""
@@ -644,22 +677,19 @@ class ResMADE:
     def begin_sampling(self, S: int):
         pass  # stateless for MADE; the transformer tracks observed columns
 
+    def sample_logits_for_col(self, c: int, bits: np.ndarray) -> np.ndarray:
+        """Column ``c``'s logits given the sampling buffer: a full forward
+        here; the transformer decodes incrementally from its KV caches."""
+        return self.logits_for_col(c, self.hidden_nograd(bits))
+
     # -------------------------------------------------------- sample (B5)
     def sample(self, n: int, rng: np.random.RandomState) -> np.ndarray:
         """Ancestral sampling of full tuples (reference made.py:696-707)."""
         x = np.zeros((n, self.D), dtype=np.int64)
-        bits = np.zeros((n, self.n_bits), dtype=self.dtype)
+        bits = self.new_input_buffer(n)
         for c in self.order:
-            h = self.hidden_nograd(bits)
-            lg = self.logits_for_col(c, h)
-            m = lg.max(axis=1, keepdims=True)
-            p = np.exp(lg - m)
-            p /= p.sum(axis=1, keepdims=True)
-            cum = p.cumsum(axis=1)
-            u = rng.rand(n, 1)
-            choice = (u > cum).sum(axis=1)
-            x[:, c] = choice
-            self._write_bits(bits, c, choice)
+            x[:, c] = sample_step(softmax(self.sample_logits_for_col(c, bits)), None, None, rng)
+            self._write_bits(bits, c, x[:, c])
         return x
 
     def _write_bits(self, bits: np.ndarray, c: int, vals: np.ndarray):

@@ -630,7 +630,7 @@ class ARTransformer:
 
     def begin_sampling(self, S: int):
         """Reset the per-query observed map (all MASK) before progressive
-        sampling; ProgressiveSampling calls this when present."""
+        sampling; the sampler walk calls this first."""
         self._sampling_observed = (
             np.zeros((S, self.D), dtype=bool) if self.column_masking else None
         )

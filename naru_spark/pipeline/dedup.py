@@ -574,6 +574,8 @@ def connected_components(
     exponentially-growing lineage.
 
     Returns (id, component) with component = min node id in the component.
+    Raises RuntimeError when no round of the first `max_iter` changed
+    nothing: the labels would not be components yet.
     """
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = fwd.unionAll(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))).cache()
@@ -608,6 +610,12 @@ def connected_components(
         labels = merged.select("u", "label")
         if n_changed == 0:
             break
+    else:
+        sym.unpersist()
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            "rounds: a chain is longer than max_iter hops"
+        )
     sym.unpersist()
     return labels.select(F.col("u").alias("id"), F.col("label").alias("component"))
 

@@ -8,6 +8,7 @@ from naru_spark.estimators import Oracle, q_error
 from naru_spark.estimators.bayes import BayesNet, chow_liu_tree, mutual_information, pairwise_mi_spark
 from naru_spark.estimators.catalyst import CatalystCBO
 from naru_spark.estimators.histogram import MaxDiffHistogram
+from naru_spark.model.binning import predicate_masks
 from naru_spark.sources import load_table
 from naru_spark.sources.registry import ESTIMATOR_COLUMNS
 from naru_spark.workload import generate_workload
@@ -199,7 +200,7 @@ def test_bn_exact_inference_matches_brute_force():
             Query("t", ["a", "b"], ["<=", "="], [3, 1]),
             Query("t", ["b", "c"], [">=", "<"], [1, 4]),
         ):
-            masks = bn._masks(q)
+            masks = predicate_masks(q, bn.columns, bn.binnings)
             # brute-force: sum the BN joint over all assignments in the box
             total = 0.0
             for xs in itertools.product(*[range(d) for d in doms]):
@@ -320,7 +321,7 @@ def test_bn_root_choice_reroots_tree():
         assert bn.topo[0] == root and root not in bn.parent
         assert f"_r{root}_" in bn.name
         for q in queries:
-            masks = bn._masks(q)
+            masks = predicate_masks(q, bn.columns, bn.binnings)
             total = 0.0
             for xs in itertools.product(*[range(d) for d in doms]):
                 p = bn.cpd[root][xs[root]]
@@ -408,7 +409,7 @@ def test_bn_greedy_multiparent_exact_ve(lineitem_setup):
         qs.append(Query("lineitem", sub[:2], ["<=", ">="], vals[:2]))
         qs.append(Query("lineitem", sub[:3], ["<=", ">=", "<="], vals))
     for q in qs:
-        masks = bn._masks(q)
+        masks = predicate_masks(q, bn.columns, bn.binnings)
         m = joint.copy()
         for i in range(len(sub)):
             if masks[i] is not None:
@@ -479,7 +480,7 @@ def test_bn_greedy3_exact_min_fill(lineitem_setup):
         qs.append(Query("lineitem", sub[:2], ["<=", ">="], vals[:2]))
         qs.append(Query("lineitem", sub[:4], ["<=", ">=", "<=", ">="], vals))
     for q in qs:
-        masks = bn._masks(q)
+        masks = predicate_masks(q, bn.columns, bn.binnings)
         m = joint.copy()
         for i in range(len(sub)):
             if masks[i] is not None:
@@ -571,7 +572,7 @@ def test_bn_exact_disconnected_node_goes_through_ve():
         ) * float(bn.cpd[2][combo[2]])
         joint[combo] = p
     q = Query("t", ["b", "c"], ["=", "="], [1, 2])
-    masks = bn._masks(q)
+    masks = predicate_masks(q, bn.columns, bn.binnings)
     m = joint.copy()
     for i in range(3):
         if masks[i] is not None:

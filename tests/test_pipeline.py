@@ -547,7 +547,8 @@ def test_token_idf_matches_manual(spark):
 
 def test_connected_components_chain_and_islands(spark):
     """Chain 1-2-3-4 (transitive closure needs >1 round), pair {10,11},
-    isolated-by-absence nodes not in edges."""
+    isolated-by-absence nodes not in edges; a path longer than max_iter
+    hops raises instead of returning unconverged labels."""
     from naru_spark.pipeline.dedup import connected_components
 
     edges = spark.createDataFrame(
@@ -556,6 +557,14 @@ def test_connected_components_chain_and_islands(spark):
     )
     got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+
+    # a 10-node path needs 9 rounds to carry label 1 to its far end, so
+    # max_iter=3 stops with unconverged labels: that must raise
+    path = spark.createDataFrame([(i, i + 1) for i in range(1, 10)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(path, max_iter=3)
+    got = {r["id"]: r["component"] for r in connected_components(path).collect()}
+    assert got == {i: 1 for i in range(1, 11)}
 
 
 def test_decontaminate_toy(spark):
