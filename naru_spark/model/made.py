@@ -282,8 +282,7 @@ class ResMADE:
         in_deg = np.concatenate(
             [np.full(self.col_bits[c], pos[c] + 1) for c in range(self.D)]
         )
-        hid_deg = (np.arange(hidden) % max(self.D - 1, 1)) + 1
-        self.hid_deg = hid_deg
+        hid_deg = self.hid_deg = self._default_hid_deg()
         out_deg = np.concatenate(
             [np.full(domains[c], pos[c] + 1) for c in range(self.D)]
         )
@@ -381,33 +380,38 @@ class ResMADE:
         self.order = order
         self._rebuild_order_masks()
 
-    def _current_hid_deg(self) -> np.ndarray:
-        hd = getattr(self, "hid_deg", None)
-        if hd is None:  # pre-feature pickle: deterministic ResMade pattern
-            hd = (np.arange(self.hidden) % max(self.D - 1, 1)) + 1
-        return hd
+    def _default_hid_deg(self) -> np.ndarray:
+        """The deterministic sequential ResMade assignment (arXiv:1904.05626)."""
+        return (np.arange(self.hidden) % max(self.D - 1, 1)) + 1
 
     def resample_masks(self, mask_seed: int | None):
         """Connectivity-mask cycling (reference ``num_masks``,
         made.py:83,129,194 and update_masks' sampled branch): resample the
         hidden-unit degree vector from ``mask_seed`` — uniform in [1, D-1],
         the 1-based analog of the reference's rng.randint(0, nin-1) — and
-        rebuild every hidden-degree-dependent mask IN PLACE (trunk block
-        masks plus lin_in/lin_out via _rebuild_order_masks). One weight set
-        then serves K connectivity patterns exactly as it serves K
-        orderings. ``None`` restores the deterministic sequential
-        assignment (the ResMade default, arXiv:1904.05626). The residual
+        install it with ``set_hid_deg``. One weight set then serves K
+        connectivity patterns exactly as it serves K orderings. ``None``
+        restores the deterministic sequential assignment. The residual
         trunk shares ONE degree vector across layers (residual adds require
         equal degrees on both summands), so a single draw covers it —
         where the reference's plain-MADE branch draws per layer."""
         if mask_seed is None:
-            self.hid_deg = (np.arange(self.hidden) % max(self.D - 1, 1)) + 1
+            self.set_hid_deg(None)
         else:
             rng = np.random.RandomState(mask_seed)
-            self.hid_deg = rng.randint(0, max(self.D - 1, 1), size=self.hidden) + 1
+            self.set_hid_deg(rng.randint(0, max(self.D - 1, 1), size=self.hidden) + 1)
+
+    def set_hid_deg(self, hid_deg: np.ndarray | None):
+        """Install a hidden-unit degree vector (None = the deterministic
+        assignment) and rebuild every mask that depends on it IN PLACE: the
+        trunk block masks, then lin_in/lin_out (and lin_direct) via
+        _rebuild_order_masks."""
+        if hid_deg is None:
+            hid_deg = self._default_hid_deg()
+        self.hid_deg = hid_deg
         dt = self.lin_in.M.dtype
         for l1, l2 in self.blocks:
-            M = (self.hid_deg[None, :] >= self.hid_deg[:, None]).astype(dt)
+            M = (hid_deg[None, :] >= hid_deg[:, None]).astype(dt)
             l1.M = M
             l2.M = M.copy()
         self._rebuild_order_masks()
@@ -416,7 +420,9 @@ class ResMADE:
         pos = np.empty(self.D, dtype=np.int64)
         for k, c in enumerate(self.order):
             pos[c] = k
-        hid_deg = self._current_hid_deg()
+        hid_deg = self.hid_deg
+        if hid_deg is None:  # pre-feature pickle: deterministic ResMade pattern
+            hid_deg = self._default_hid_deg()
         out_deg = np.concatenate(
             [np.full(self.domains[c], pos[c] + 1) for c in range(self.D)]
         )
@@ -655,6 +661,11 @@ class ResMADE:
             l.dW[:] = 0
             l.db[:] = 0
 
+    def params_grads(self) -> list[tuple[np.ndarray, np.ndarray]]:
+        """Flat ``(value, grad)`` list over every trainable array, in
+        ``layers()`` order — what Adam and the weight exchange iterate."""
+        return [pg for l in self.layers() for pg in l.params_grads()]
+
     def layers(self):
         out = [self.lin_in, self.lin_out]
         for l1, l2 in self.blocks:
@@ -751,43 +762,58 @@ class ResMADE:
         return model
 
 
-class Adam:
-    """Adam (train_model.py:375-383: lr 2e-4 default)."""
+def get_weights(model) -> list[np.ndarray]:
+    """Copies of ``model``'s trainable arrays, in ``params_grads()`` order
+    (ResMADE or ARTransformer)."""
+    return [v.copy() for v, _ in model.params_grads()]
 
-    def __init__(self, model: ResMADE, lr: float = 2e-4, betas=(0.9, 0.999), eps: float = 1e-8):
+
+def set_weights(model, weights: list[np.ndarray]) -> None:
+    """Copy ``weights`` (a ``get_weights`` list of a same-shaped model)
+    into ``model``'s trainable arrays IN PLACE, casting to their dtype."""
+    pgs = model.params_grads()
+    assert len(pgs) == len(weights), "weight count mismatch"
+    for (v, _), w in zip(pgs, weights):
+        assert v.shape == w.shape, "weight shape mismatch"
+        v[...] = w
+
+
+class Adam:
+    """Adam over ``model.params_grads()`` — one optimizer for both archs
+    (train_model.py:375-383: lr 2e-4 default; the transformer trains with
+    betas (0.9, 0.98) and eps 1e-9)."""
+
+    def __init__(self, model, lr: float = 2e-4, betas=(0.9, 0.999), eps: float = 1e-8):
         self.model = model
         self.lr = lr
         self.b1, self.b2 = betas
         self.eps = eps
         self.t = 0
-        self.m = [np.zeros_like(p) for l in model.layers() for p, _ in l.params_grads()]
-        self.v = [np.zeros_like(p) for l in model.layers() for p, _ in l.params_grads()]
+        params = [p for p, _ in model.params_grads()]
+        self.m = [np.zeros_like(p) for p in params]
+        self.v = [np.zeros_like(p) for p in params]
         # persistent scratch: the naive step allocated ~8 fresh temporaries
         # per parameter per step; every rewrite below is an in-place or
         # commutative-swap equivalent, so updates are bit-identical
-        self._s1 = [np.zeros_like(p) for l in model.layers() for p, _ in l.params_grads()]
-        self._s2 = [np.zeros_like(p) for l in model.layers() for p, _ in l.params_grads()]
+        self._s1 = [np.zeros_like(p) for p in params]
+        self._s2 = [np.zeros_like(p) for p in params]
 
     def step(self):
         self.t += 1
         bc1 = 1 - self.b1**self.t
         bc2 = 1 - self.b2**self.t
-        i = 0
-        for l in self.model.layers():
-            for p, g in l.params_grads():
-                m, v, s1, s2 = self.m[i], self.v[i], self._s1[i], self._s2[i]
-                m *= self.b1
-                np.multiply(g, 1 - self.b1, out=s1)
-                m += s1  # b1*m + (1-b1)*g
-                v *= self.b2
-                np.multiply(g, g, out=s1)
-                s1 *= 1 - self.b2
-                v += s1  # b2*v + (1-b2)*(g*g)
-                np.divide(m, bc1, out=s1)  # mhat
-                s1 *= self.lr
-                np.divide(v, bc2, out=s2)  # vhat
-                np.sqrt(s2, out=s2)
-                s2 += self.eps
-                s1 /= s2  # (lr*mhat) / (sqrt(vhat)+eps)
-                p -= s1
-                i += 1
+        for (p, g), m, v, s1, s2 in zip(self.model.params_grads(), self.m, self.v, self._s1, self._s2):
+            m *= self.b1
+            np.multiply(g, 1 - self.b1, out=s1)
+            m += s1  # b1*m + (1-b1)*g
+            v *= self.b2
+            np.multiply(g, g, out=s1)
+            s1 *= 1 - self.b2
+            v += s1  # b2*v + (1-b2)*(g*g)
+            np.divide(m, bc1, out=s1)  # mhat
+            s1 *= self.lr
+            np.divide(v, bc2, out=s2)  # vhat
+            np.sqrt(s2, out=s2)
+            s2 += self.eps
+            s1 /= s2  # (lr*mhat) / (sqrt(vhat)+eps)
+            p -= s1

@@ -1,15 +1,27 @@
-"""Training pipeline: Spark-encoded data -> numpy ResMADE.
+"""Training pipeline: Spark-encoded data -> numpy ResMADE or ARTransformer.
 
 MLlib-style Estimator/Model pair (the north star's "MLlib pipeline + custom
-estimator"): ``NaruEstimator.fit(df)`` runs the Spark side (dictionary fit,
-model-bin encode, optional sample) and then the driver-side training loop
-(reference RunEpoch, train_model.py:126-253).
+estimator"). Training is one core: ``NaruEstimator._new_model`` builds the
+model and its ``Adam``, and ``NaruEstimator._epochs`` is the one epoch loop
+(reference RunEpoch, train_model.py:126-253). Two entry points drive it:
 
-Scale path: the training matrix is collected through ``sample_rows`` — at
-100 TB you train on a uniform sample (the estimator's accuracy depends on
-rows seen, not on epoch-ing the full table; the reference trains single-node
-on the full 11.6M-row DMV, which a 1%% sample of 1B rows matches). The
-encode stage itself is fully distributed (DictionaryEncoder.transform).
+- ``fit`` runs the Spark side (dictionary fit, model-bin encode, optional
+  uniform sample), collects the sample to the driver and trains it there.
+  Its per-step hook applies the Noam warm-up LR, mask cycling and order
+  cycling.
+- ``fit_distributed`` runs the same ``_epochs`` on every partition from
+  broadcast weights (no row leaves its executor) and averages the shards'
+  weights by row count, per round.
+
+Weights move between models only through the flat ``get_weights`` /
+``set_weights`` exchange over ``params_grads()``, so warm start, the shard
+broadcast and the averaging carry no per-arch code.
+
+Scale path for ``fit``: at 100 TB you train on a uniform sample (the
+estimator's accuracy depends on rows seen, not on epoch-ing the full table;
+the reference trains single-node on the full 11.6M-row DMV, which a 1%
+sample of 1B rows matches). The encode stage itself is fully distributed
+(DictionaryEncoder.transform).
 """
 
 from __future__ import annotations
@@ -22,7 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 from naru_spark.encoding import DictionaryEncoder
 from naru_spark.meta import TableMeta
 from naru_spark.model.binning import ModelBinning
-from naru_spark.model.made import Adam, ResMADE
+from naru_spark.model.made import Adam, ResMADE, get_weights, set_weights
 
 
 def lr_schedule(
@@ -134,30 +146,25 @@ class NaruEstimator:
         self.warmups = warmups
         self.data_bits = data_bits
         self.order_cycle = [list(o) for o in order_cycle] if order_cycle else None
-        if self.order_cycle:
-            assert arch == "made", "order cycling: ResMADE only"
         self.num_masks = int(num_masks)
-        if self.num_masks > 1:
-            assert arch == "made", "mask cycling: ResMADE only"
         self.direct_io = direct_io
         self.output_encoding = output_encoding
         self.input_no_emb_if_leq = input_no_emb_if_leq
+        if arch == "transformer":
+            made_only = {
+                "order_cycle": self.order_cycle,
+                "num_masks": self.num_masks > 1,
+                "input_encoding": input_encoding != "binary",
+                "output_encoding": output_encoding != "one_hot",
+                "direct_io": direct_io,
+                "input_no_emb_if_leq": input_no_emb_if_leq,
+            }
+            bad = [k for k, v in made_only.items() if v]
+            assert not bad, f"{', '.join(bad)}: ResMADE only"
 
-    def fit(
-        self,
-        df: DataFrame,
-        meta: TableMeta | None = None,
-        encoder: DictionaryEncoder | None = None,
-        warm_start: "NaruModel | None" = None,
-    ) -> NaruModel:
-        """``warm_start``: continue training from an existing model's
-        weights instead of a fresh init — the production refresh path
-        (nightly re-fit starts near yesterday's solution and converges in
-        a fraction of the epochs; measured in model_refresh_report).
-        Requires the same architecture and the SAME binnings/encoder
-        (domain-stable refresh — shapes are asserted); the optimizer
-        state starts fresh, matching the common warm-restart practice."""
-        t0 = time.time()
+    def _prepare(self, df: DataFrame, meta: TableMeta | None, encoder: DictionaryEncoder | None):
+        """Fit the dictionaries and the table meta unless given; returns
+        ``(encoder, meta, binnings)``."""
         if encoder is None:
             encoder = DictionaryEncoder(self.columns).fit(df)
         if meta is None:
@@ -165,99 +172,53 @@ class NaruEstimator:
         binnings = {
             c: ModelBinning(encoder.dictionaries[c], self.max_model_domain) for c in self.columns
         }
+        return encoder, meta, binnings
 
-        # Spark side: encode to raw bins, optionally uniform-sample, collect
-        # the [N, D] int32 training matrix (reference TableDataset,
-        # common.py:237-251 — there the full table; here sample-bounded).
-        src = df.select(*self.columns)
-        if self.sample_rows is not None and meta.cardinality > self.sample_rows:
-            # sample BEFORE encoding: the dictionary join/searchsorted then
-            # touches sample_rows rows, not the full table
-            frac = min(1.0, self.sample_rows / meta.cardinality * 1.1)
-            src = src.sample(fraction=frac, seed=self.seed)
-        encoded = encoder.transform(src)
-        bin_cols = [f"{c}__bin" for c in self.columns]
-        pdf = encoded.select(*bin_cols).toPandas()
-        raw = pdf.to_numpy(dtype=np.int64)
-        data = np.stack(
-            [binnings[c].encode(raw[:, i]) for i, c in enumerate(self.columns)], axis=1
-        )
-
-        sizes = [binnings[c].model_size for c in self.columns]
+    def _new_model(self, sizes: list[int]):
+        """A freshly initialised model over per-column domains ``sizes`` and
+        its optimizer: ``(model, Adam)``. float32 throughout (sgemm: ~2x the
+        float64 training throughput)."""
         if self.arch == "transformer":
-            from naru_spark.model.transformer import AdamT, ARTransformer
+            from naru_spark.model.transformer import ARTransformer
 
             made = ARTransformer(
-                sizes,
-                d_model=self.hidden,
-                d_ff=self.hidden * 4,
-                n_heads=4,
-                blocks=self.blocks,
-                seed=self.seed,
-                dtype=np.float32,
-                column_masking=self.column_masking,
-                order=self.order,
+                sizes, d_model=self.hidden, d_ff=self.hidden * 4, n_heads=4,
+                blocks=self.blocks, seed=self.seed, dtype=np.float32,
+                column_masking=self.column_masking, order=self.order,
             )
-            opt = AdamT(made, lr=self.lr)
-            if warm_start is not None:
-                src = warm_start.made
-                assert self.arch == warm_start.fit_info.get("arch", "made")
-                for p_dst, p_src in zip(made.params(), src.params()):
-                    assert p_dst.v.shape == p_src.v.shape, "warm_start shape mismatch"
-                    p_dst.v = p_src.v.copy()
-        else:
-            made = ResMADE(
-                sizes,
-                hidden=self.hidden,
-                blocks=self.blocks,
-                seed=self.seed,
-                dtype=np.float32,  # sgemm: ~2x the float64 training throughput
-                column_masking=self.column_masking,
-                order=self.order,
-                input_encoding=self.input_encoding,
-                embed_size=self.embed_size,
-                direct_io=self.direct_io,
-                output_encoding=self.output_encoding,
-                input_no_emb_if_leq=self.input_no_emb_if_leq,
-            )
-            opt = Adam(made, lr=self.lr)
-            if warm_start is not None:
-                src = warm_start.made
-                assert warm_start.fit_info.get("arch", "made") == "made"
-                for l_dst, l_src in zip(made.layers(), src.layers()):
-                    assert l_dst.W.shape == l_src.W.shape, "warm_start shape mismatch"
-                    l_dst.W, l_dst.b = l_src.W.copy(), l_src.b.copy()
-        rng = np.random.RandomState(self.seed)
-        N = len(data)
-        D = len(self.columns)
-        loss = float("nan")
-        tot, nb = 0.0, 0
+            # transformer betas and eps per reference train_model.py:375-383
+            return made, Adam(made, lr=self.lr, betas=(0.9, 0.98), eps=1e-9)
+        made = ResMADE(
+            sizes, hidden=self.hidden, blocks=self.blocks, seed=self.seed,
+            dtype=np.float32, column_masking=self.column_masking, order=self.order,
+            input_encoding=self.input_encoding, embed_size=self.embed_size,
+            direct_io=self.direct_io, output_encoding=self.output_encoding,
+            input_no_emb_if_leq=self.input_no_emb_if_leq,
+        )
+        return made, Adam(made, lr=self.lr)
+
+    def _epochs(
+        self, made, opt: Adam, data: np.ndarray, rng: np.random.RandomState, epochs: int, on_step=None
+    ):
+        """The training loop (reference RunEpoch, train_model.py:126-253):
+        per epoch a fresh permutation of the [N, D] model-bin matrix
+        ``data``, then per batch wildcard dropout, forward, NLL, backward and
+        one optimizer step. ``on_step(global_step)`` (1-based, counted
+        across epochs) runs before each batch. Yields each epoch's mean
+        NLL in nats. ``data`` must have at least one row."""
+        N, D = data.shape
         # encode the whole training matrix ONCE (N x n_bits float32); the
-        # per-batch work is then a row gather + vectorized mask apply
-        pre_bits = None
-        if self.arch == "made":
-            pre_bits = made.encode_bits(data)
-        global_step = 0
-        for epoch in range(self.epochs):
+        # per-batch work is then a row gather + vectorized mask apply. The
+        # transformer embeds per batch inside forward().
+        pre_bits = made.encode_bits(data) if self.arch == "made" else None
+        step = 0
+        for _ in range(epochs):
             perm = rng.permutation(N)
             tot, nb = 0.0, 0
             for lo in range(0, N, self.batch_size):
-                global_step += 1
-                if self.warmups:
-                    # d_model analog: the reference uses model.embed_size
-                    opt.lr = lr_schedule(global_step, self.hidden, self.warmups)
-                if self.num_masks > 1:
-                    # one weight set, K CONNECTIVITY patterns: resample the
-                    # hidden degrees per step from a cycling seed (reference
-                    # num_masks, made.py:83,129,194) — composes with order
-                    # cycling below (orderings rebuild in/out masks on top
-                    # of whatever hidden degrees are active)
-                    made.resample_masks(self.seed + (global_step % self.num_masks))
-                if self.order_cycle:
-                    # one weight set, K orderings: rebuild the two
-                    # order-dependent masks per step (made.update_order) —
-                    # the reference's multi-mask training (made.py:277-393)
-                    made.update_order(self.order_cycle[global_step % len(self.order_cycle)])
+                step += 1
+                if on_step is not None:
+                    on_step(step)
                 idx = perm[lo : lo + self.batch_size]
                 b = data[idx]
                 observed = None
@@ -279,19 +240,81 @@ class NaruEstimator:
                 opt.step()
                 tot += loss
                 nb += 1
+            yield tot / nb
+
+    def fit(
+        self,
+        df: DataFrame,
+        meta: TableMeta | None = None,
+        encoder: DictionaryEncoder | None = None,
+        warm_start: "NaruModel | None" = None,
+    ) -> NaruModel:
+        """``warm_start``: continue training from an existing model's
+        weights instead of a fresh init — the production refresh path
+        (nightly re-fit starts near yesterday's solution and converges in
+        a fraction of the epochs; measured in model_refresh_report).
+        Requires the same architecture and the SAME binnings/encoder
+        (domain-stable refresh — shapes are asserted); the optimizer
+        state starts fresh, matching the common warm-restart practice."""
+        t0 = time.time()
+        encoder, meta, binnings = self._prepare(df, meta, encoder)
+
+        # Spark side: encode to raw bins, optionally uniform-sample, collect
+        # the [N, D] int32 training matrix (reference TableDataset,
+        # common.py:237-251 — there the full table; here sample-bounded).
+        src = df.select(*self.columns)
+        if self.sample_rows is not None and meta.cardinality > self.sample_rows:
+            # sample BEFORE encoding: the dictionary join/searchsorted then
+            # touches sample_rows rows, not the full table
+            frac = min(1.0, self.sample_rows / meta.cardinality * 1.1)
+            src = src.sample(fraction=frac, seed=self.seed)
+        encoded = encoder.transform(src)
+        bin_cols = [f"{c}__bin" for c in self.columns]
+        pdf = encoded.select(*bin_cols).toPandas()
+        raw = pdf.to_numpy(dtype=np.int64)
+        data = np.stack(
+            [binnings[c].encode(raw[:, i]) for i, c in enumerate(self.columns)], axis=1
+        )
+        if not len(data):
+            raise ValueError("fit: input DataFrame is empty (no rows to train on)")
+
+        made, opt = self._new_model([binnings[c].model_size for c in self.columns])
+        if warm_start is not None:
+            assert warm_start.fit_info.get("arch", "made") == self.arch
+            set_weights(made, get_weights(warm_start.made))
+
+        def on_step(step: int):
+            if self.warmups:
+                # d_model analog: the reference uses model.embed_size
+                opt.lr = lr_schedule(step, self.hidden, self.warmups)
+            if self.num_masks > 1:
+                # one weight set, K CONNECTIVITY patterns: resample the
+                # hidden degrees per step from a cycling seed (reference
+                # num_masks, made.py:83,129,194) — composes with order
+                # cycling below (orderings rebuild in/out masks on top
+                # of whatever hidden degrees are active)
+                made.resample_masks(self.seed + (step % self.num_masks))
+            if self.order_cycle:
+                # one weight set, K orderings: rebuild the two
+                # order-dependent masks per step (made.update_order) —
+                # the reference's multi-mask training (made.py:277-393)
+                made.update_order(self.order_cycle[step % len(self.order_cycle)])
+
+        rng = np.random.RandomState(self.seed)
+        nll = float("nan")
+        for epoch, nll in enumerate(self._epochs(made, opt, data, rng, self.epochs, on_step)):
             if self.verbose:
-                bits = tot / nb / np.log(2)
+                bits = nll / np.log(2)
                 gap = "" if self.data_bits is None else f" entropy gap {bits - self.data_bits:.4f} bits"
                 print(
-                    f"epoch {epoch}: nll {tot/nb:.4f} nats ({bits:.3f} bits/tuple){gap}"
+                    f"epoch {epoch}: nll {nll:.4f} nats ({bits:.3f} bits/tuple){gap}"
                     f" lr {opt.lr:.5f} [{time.time()-t0:.0f}s]"
                 )
-        model_bits = float(tot / nb / np.log(2)) if nb else float("nan")
         fit_info = {
             "arch": self.arch,
             "epochs": self.epochs,
             "seed": self.seed,
-            "model_bits": model_bits,
+            "model_bits": float(nll / np.log(2)),
             "input_encoding": self.input_encoding,
         }
         return NaruModel(made, binnings, meta, list(self.columns), fit_info=fit_info)
@@ -310,99 +333,43 @@ class NaruEstimator:
         isn't available, which from Python-on-Spark it is not).
 
         Contrast with ``fit`` (collect a bounded sample to the driver, train
-        there): here NO row leaves its executor — each partition trains
-        ``local_epochs`` on its own shard from the same broadcast weights,
-        ships back one weight vector (model-sized, ~MBs), and the driver
-        averages weighted by shard row count. At 100 TB that is the only
-        shape that works on the FULL table: network cost per round is
-        O(partitions x model size), not O(rows).
+        there): here NO row leaves its executor — each partition runs the
+        same ``_epochs`` loop for ``local_epochs`` on its own shard from the
+        same broadcast weights, ships back one weight vector (model-sized,
+        ~MBs), and the driver averages weighted by shard row count. At
+        100 TB that is the only shape that works on the FULL table: network
+        cost per round is O(partitions x model size), not O(rows).
 
         Rounds trade communication for staleness: more rounds -> closer to
         single-node SGD on the shuffled union. Deterministic given a fixed
         input partitioning (per-partition RNG seeded by partition id).
+        Shards train with a constant lr under one ordering, so ``warmups``
+        and ``order_cycle`` are refused rather than silently ignored.
         """
+        import functools
         import pickle
-        import warnings
 
-        if self.arch not in ("made", "transformer"):
-            raise NotImplementedError(f"distributed fit: unknown arch {self.arch}")
         if self.warmups or self.order_cycle:
-            # shard-local SGD runs constant-lr, single-ordering; a model
-            # configured with these would silently train differently here
-            # than through fit()
-            warnings.warn(
-                "fit_distributed ignores warmups/order_cycle: shards train "
-                "with constant lr and the model's single fixed ordering",
-                stacklevel=2,
+            raise ValueError(
+                "fit_distributed does not support warmups/order_cycle: shards "
+                "train with constant lr and the model's single fixed ordering"
             )
-        if encoder is None:
-            encoder = DictionaryEncoder(self.columns).fit(df)
-        if meta is None:
-            meta = encoder.table_meta(df, "table")
-        binnings = {
-            c: ModelBinning(encoder.dictionaries[c], self.max_model_domain) for c in self.columns
-        }
+        encoder, meta, binnings = self._prepare(df, meta, encoder)
         sizes = [binnings[c].model_size for c in self.columns]
         bin_cols = [f"{c}__bin" for c in self.columns]
         encoded = encoder.transform(df.select(*self.columns)).select(*bin_cols)
-
-        arch = self.arch
-        columns = list(self.columns)
-        hidden, blocks, seed = self.hidden, self.blocks, self.seed
-        column_masking, order = self.column_masking, self.order
-        input_encoding, embed_size = self.input_encoding, self.embed_size
-        direct_io, output_encoding = self.direct_io, self.output_encoding
-        input_no_emb_if_leq = self.input_no_emb_if_leq
-        num_masks = self.num_masks
         epochs = local_epochs if local_epochs is not None else self.epochs
-        batch_size, lr = self.batch_size, self.lr
         sc = df.sparkSession.sparkContext
 
-        # Arch-agnostic worker protocol, closed over LOCALS only (no self):
-        # identical construction on driver and every shard (same seed, so
-        # parameter shapes always line up — only VALUES travel), plus flat
-        # get/install of the trainable arrays. ResMADE exchanges (W, b) per
-        # layer; the transformer exchanges its flat Param list.
-        def construct():
-            if arch == "transformer":
-                from naru_spark.model.transformer import ARTransformer
-
-                return ARTransformer(
-                    sizes, d_model=hidden, d_ff=hidden * 4, n_heads=4,
-                    blocks=blocks, seed=seed, dtype=np.float32,
-                    column_masking=column_masking, order=order,
-                )
-            return ResMADE(
-                sizes, hidden=hidden, blocks=blocks, seed=seed,
-                dtype=np.float32, column_masking=column_masking, order=order,
-                input_encoding=input_encoding, embed_size=embed_size,
-                direct_io=direct_io, output_encoding=output_encoding,
-                input_no_emb_if_leq=input_no_emb_if_leq,
-            )
-
-        def get_weights(m):
-            if arch == "transformer":
-                return [p.v.copy() for p in m.params()]
-            return [(l.W.copy(), l.b.copy()) for l in m.layers()]
-
-        def install_weights(m, ws, cast32: bool = False):
-            if arch == "transformer":
-                for p, w in zip(m.params(), ws):
-                    p.v = w.astype(np.float32) if cast32 else w.copy()
-            else:
-                for l, (W, b) in zip(m.layers(), ws):
-                    if cast32:
-                        l.W, l.b = W.astype(np.float32), b.astype(np.float32)
-                    else:
-                        l.W, l.b = W.copy(), b.copy()
-
-        made = construct()
+        # Driver and every shard build the model the same way (same seed,
+        # so parameter shapes always line up — only VALUES travel).
+        made, _ = self._new_model(sizes)
 
         # Ship ONLY the per-column raw->model lookup arrays (all encode()
         # needs), broadcast once for all rounds — closure-capturing the
         # binnings dict would serialize every ColumnDictionary into every
         # task of every round (O(distinct values) per high-card column).
-        enc_bc = sc.broadcast({c: binnings[c].raw_to_model for c in columns})
+        enc_bc = sc.broadcast({c: binnings[c].raw_to_model for c in self.columns})
 
         weights = get_weights(made)
         for rnd in range(rounds):
@@ -418,50 +385,22 @@ class NaruEstimator:
                 raw = pd.concat(pdfs).to_numpy(dtype="int64")
                 lookup = enc_bc.value
                 data = np.stack(
-                    [lookup[c][raw[:, i]] for i, c in enumerate(columns)], axis=1
+                    [lookup[c][raw[:, i]] for i, c in enumerate(self.columns)], axis=1
                 )
-                local = construct()
-                install_weights(local, pickle.loads(w_bc.value))
-                if num_masks > 1:
+                local, opt = self._new_model(sizes)
+                set_weights(local, pickle.loads(w_bc.value))
+                if self.num_masks > 1:
                     # connectivity-mask cycling on the distributed path: one
                     # mask per ROUND, identical across shards (seeded by the
                     # round index, not the step counter) — shards must train
                     # under the SAME connectivity or the row-weighted weight
                     # average mixes incompatible masked subnetworks.
-                    local.resample_masks(seed + (rnd % num_masks))
-                if arch == "transformer":
-                    from naru_spark.model.transformer import AdamT
-
-                    opt = AdamT(local, lr=lr)
-                else:
-                    opt = Adam(local, lr=lr)
+                    local.resample_masks(self.seed + (rnd % self.num_masks))
                 pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-                rng = np.random.RandomState(seed + 1009 * rnd + pid)
-                N, D = len(data), len(columns)
-                # MADE pre-encodes the whole shard to input bits once; the
-                # transformer embeds per batch inside forward()
-                pre_bits = local.encode_bits(data) if arch == "made" else None
-                for _ in range(epochs):
-                    perm = rng.permutation(N)
-                    for lo in range(0, N, batch_size):
-                        idx = perm[lo : lo + batch_size]
-                        b = data[idx]
-                        observed = None
-                        if column_masking:
-                            p_mask = rng.randint(0, D + 1) / D
-                            observed = rng.rand(len(b), D) >= p_mask
-                        if pre_bits is not None:
-                            bits_b = pre_bits[idx]
-                            if observed is not None:
-                                bits_b = local.apply_observed(bits_b, observed)
-                            logits = local.forward_encoded(bits_b)
-                        else:
-                            logits = local.forward(b, observed=observed)
-                        _, dl = local.nll(logits, b)
-                        local.zero_grad()
-                        local.backward(dl)
-                        opt.step()
-                yield pd.DataFrame({"n": [N], "w": [pickle.dumps(get_weights(local))]})
+                rng = np.random.RandomState(self.seed + 1009 * rnd + pid)
+                for _ in self._epochs(local, opt, data, rng, epochs):
+                    pass
+                yield pd.DataFrame({"n": [len(data)], "w": [pickle.dumps(get_weights(local))]})
 
             rows = encoded.mapInPandas(train_shard, schema="n long, w binary").collect()
             if not rows:
@@ -469,39 +408,27 @@ class NaruEstimator:
                     "fit_distributed: input DataFrame is empty (no partition yielded rows)"
                 )
             total = sum(r.n for r in rows)
-            acc = None
-            for r in rows:
-                shard = pickle.loads(bytes(r.w))
-                frac = r.n / total
-                if arch == "transformer":  # flat Param arrays
-                    if acc is None:
-                        acc = [w * frac for w in shard]
-                    else:
-                        acc = [a + w * frac for a, w in zip(acc, shard)]
-                elif acc is None:
-                    acc = [(W * frac, b * frac) for W, b in shard]
-                else:
-                    acc = [
-                        (aW + W * frac, ab + b * frac)
-                        for (aW, ab), (W, b) in zip(acc, shard)
-                    ]
-            weights = acc
+            fracs = [r.n / total for r in rows]
+            shards = [pickle.loads(bytes(r.w)) for r in rows]
+            weights = [
+                functools.reduce(np.add, [w * f for w, f in zip(ws, fracs)]) for ws in zip(*shards)
+            ]
             w_bc.unpersist()
         enc_bc.unpersist()
 
-        if num_masks > 1:
+        if self.num_masks > 1:
             # The averaged weights were trained under the per-round cycled
             # connectivity masks, never under the construction-time
             # deterministic masks — leave the driver model on the LAST
             # round's mask (the single-node fit() likewise ends on its last
             # trained mask), or inference would run averaged weights under
             # an untrained connectivity pattern.
-            made.resample_masks(seed + ((rounds - 1) % num_masks))
-        install_weights(made, weights, cast32=True)
+            made.resample_masks(self.seed + ((rounds - 1) % self.num_masks))
+        set_weights(made, weights)
         fit_info = {
-            "arch": arch,
+            "arch": self.arch,
             "epochs": epochs * rounds,
-            "seed": seed,
+            "seed": self.seed,
             "model_bits": float("nan"),
             "distributed_rounds": rounds,
             "input_encoding": self.input_encoding,
@@ -549,7 +476,6 @@ def multi_order_nll(
     MultiOrderEnsemble's estimates."""
     if per_row_nll is not None:
         logps = [-nll for nll in per_row_nll]
-        K = len(per_row_nll)
     elif orders is not None:
         assert len(models) == 1, "orders: pass exactly one multi-mask model"
         made = getattr(models[0], "made", models[0])
@@ -563,14 +489,9 @@ def multi_order_nll(
             # leave the shared model as we found it — other estimators may
             # hold it
             made.update_order(prev_order)
-        K = len(orders)
     else:
-        K = len(models)
         logps = [-model_nll_rows(m, data) for m in models]
-    lp = np.stack(logps, axis=1)  # [N, K]
-    mx = lp.max(axis=1, keepdims=True)
-    lse = mx[:, 0] + np.log(np.exp(lp - mx).sum(axis=1))
-    return float(np.mean(-(lse + np.log(1.0 / K))))
+    return _mixture_nll(logps)
 
 
 def multi_mask_nll(
@@ -583,32 +504,24 @@ def multi_mask_nll(
     per-row likelihoods mix by logsumexp. The model's masks are restored
     to their entry state afterwards — other estimators may hold it."""
     made = getattr(model, "made", model)
-    prev = None if getattr(made, "hid_deg", None) is None else made.hid_deg.copy()
-    prev_is_default = prev is None or np.array_equal(
-        prev, (np.arange(made.hidden) % max(made.D - 1, 1)) + 1
-    )
+    prev = made.hid_deg
     logps = []
     try:
         for seed in mask_seeds:
             made.resample_masks(seed)
             logps.append(-model_nll_rows(made, data))
     finally:
-        if prev_is_default:
-            made.resample_masks(None)
-        else:
-            # rebuild every hidden-degree mask from the saved vector
-            made.hid_deg = prev
-            dt = made.lin_in.M.dtype
-            for l1, l2 in made.blocks:
-                M = (prev[None, :] >= prev[:, None]).astype(dt)
-                l1.M = M
-                l2.M = M.copy()
-            made._rebuild_order_masks()
-    K = len(mask_seeds)
-    lp = np.stack(logps, axis=1)
+        made.set_hid_deg(prev)
+    return _mixture_nll(logps)
+
+
+def _mixture_nll(logps: list[np.ndarray]) -> float:
+    """Mean NLL (nats) of the uniform K-member mixture, from each member's
+    per-row log-likelihoods: -log p(x) = -(logsumexp_i logp_i(x) + log(1/K))."""
+    lp = np.stack(logps, axis=1)  # [N, K]
     mx = lp.max(axis=1, keepdims=True)
     lse = mx[:, 0] + np.log(np.exp(lp - mx).sum(axis=1))
-    return float(np.mean(-(lse + np.log(1.0 / K))))
+    return float(np.mean(-(lse + np.log(1.0 / len(logps)))))
 
 
 def table_bits(df: DataFrame, columns: list[str]) -> float:

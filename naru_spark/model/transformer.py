@@ -596,6 +596,11 @@ class ARTransformer:
             out += h.params()
         return out
 
+    def params_grads(self) -> list[tuple[np.ndarray, np.ndarray]]:
+        """Flat ``(value, grad)`` list in ``params()`` order — what Adam
+        and the weight exchange iterate."""
+        return [(p.v, p.g) for p in self.params()]
+
     def zero_grad(self):
         for p in self.params():
             p.g[:] = 0
@@ -787,41 +792,3 @@ class ARTransformer:
         h_c = self._inc_chain(c)
         return self._lin_nograd(self.heads[c], h_c)
 
-
-class AdamT:
-    def __init__(self, model: ARTransformer, lr: float = 5e-3, betas=(0.9, 0.98), eps: float = 1e-9):
-        # transformer betas per reference train_model.py:375-383
-        self.model = model
-        self.lr = lr
-        self.b1, self.b2 = betas
-        self.eps = eps
-        self.t = 0
-        self.m = [np.zeros_like(p.v) for p in model.params()]
-        self.v = [np.zeros_like(p.v) for p in model.params()]
-        # persistent scratch (see Adam in made.py): in-place/commutative
-        # rewrite of the update — bit-identical, ~8 fewer allocations per
-        # parameter per step
-        self._s1 = [np.zeros_like(p.v) for p in model.params()]
-        self._s2 = [np.zeros_like(p.v) for p in model.params()]
-
-    def step(self):
-        self.t += 1
-        bc1 = 1 - self.b1**self.t
-        bc2 = 1 - self.b2**self.t
-        for i, p in enumerate(self.model.params()):
-            g = p.g
-            m, v, s1, s2 = self.m[i], self.v[i], self._s1[i], self._s2[i]
-            m *= self.b1
-            np.multiply(g, 1 - self.b1, out=s1)
-            m += s1
-            v *= self.b2
-            np.multiply(g, g, out=s1)
-            s1 *= 1 - self.b2
-            v += s1
-            np.divide(m, bc1, out=s1)
-            s1 *= self.lr
-            np.divide(v, bc2, out=s2)
-            np.sqrt(s2, out=s2)
-            s2 += self.eps
-            s1 /= s2
-            p.v -= s1

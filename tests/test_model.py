@@ -204,14 +204,14 @@ def test_transformer_incremental_decode_parity(order, column_masking):
 def test_transformer_learns_correlation():
     """Same convergence gate as ResMADE: a perfectly correlated pair must
     compress to ~single-column entropy."""
-    from naru_spark.model.transformer import AdamT, ARTransformer
+    from naru_spark.model.transformer import ARTransformer
 
     rng = np.random.RandomState(0)
     N = 4000
     a = rng.randint(0, 16, N)
     data = np.stack([a, a], axis=1).astype(np.int64)
     m = ARTransformer([16, 16], d_model=32, d_ff=64, n_heads=2, blocks=2, seed=0)
-    opt = AdamT(m, lr=5e-3)
+    opt = Adam(m, lr=5e-3, betas=(0.9, 0.98), eps=1e-9)
     bits = None
     for _ in range(8):
         perm = rng.permutation(N)
@@ -1261,7 +1261,34 @@ def test_fit_distributed_cycles_masks(spark):
         return np.concatenate([l.W.ravel() for l in model.made.layers()])
 
     assert not np.allclose(weights(1), weights(2))
+    # shards train with a constant lr under one ordering: a model configured
+    # otherwise must be refused, not silently trained differently
+    for kw in ({"warmups": 10}, {"order_cycle": [[0, 1, 2], [2, 1, 0]]}):
+        with pytest.raises(ValueError, match="warmups/order_cycle"):
+            NaruEstimator(cols, hidden=16, blocks=1, epochs=1, seed=0, **kw).fit_distributed(
+                df, meta, enc
+            )
     df.unpersist()
+
+
+def test_fit_rejects_empty_input(spark):
+    """Both fit paths must refuse a zero-row input instead of returning an
+    untrained model (fit used to report model_bits = nan)."""
+    from naru_spark.encoding import DictionaryEncoder
+    from naru_spark.model.train import NaruEstimator
+    from naru_spark.sources import load_table
+    from tests.conftest import SF_SMOKE
+
+    cols = ["l_returnflag", "l_linestatus", "l_quantity"]
+    df = load_table(spark, "lineitem", SF_SMOKE, cols).limit(500)
+    enc = DictionaryEncoder(cols).fit(df)
+    meta = enc.table_meta(df, "lineitem")
+    empty = df.filter("false")
+    est = NaruEstimator(cols, hidden=16, blocks=1, epochs=1, seed=0)
+    with pytest.raises(ValueError, match="empty"):
+        est.fit(empty, meta, enc)
+    with pytest.raises(ValueError, match="empty"):
+        est.fit_distributed(empty, meta, enc, rounds=1)
 
 
 def test_fit_distributed_transformer(spark):
@@ -1293,12 +1320,18 @@ def test_fit_distributed_transformer(spark):
     errs = [q_error(ps.query(q), t) for q, t in zip(wl, truths) if t > 0]
     assert len(errs) >= 6
     assert np.median(errs) <= 5.0, errs
-    # num_masks is a MADE concept — the constructor already refuses the
-    # combination, so the distributed path can never see it
-    with pytest.raises(AssertionError, match="ResMADE only"):
-        NaruEstimator(
-            cols, arch="transformer", hidden=16, blocks=1, epochs=1, seed=0, num_masks=2
-        )
+    # num_masks and the input/output options are MADE concepts — the
+    # constructor refuses them, so no fit path can silently ignore them
+    for kw in (
+        {"num_masks": 2},
+        {"order_cycle": [[0, 1, 2], [2, 1, 0]]},
+        {"input_encoding": "one_hot"},
+        {"output_encoding": "embed"},
+        {"direct_io": True},
+        {"input_no_emb_if_leq": True},
+    ):
+        with pytest.raises(AssertionError, match="ResMADE only"):
+            NaruEstimator(cols, arch="transformer", hidden=16, blocks=1, epochs=1, seed=0, **kw)
     df.unpersist()
 
 
