@@ -38,6 +38,30 @@ def test_valid_bins_mask_matches_direct_eval(domain, has_null, op, val):
         assert (mask == expect).all()
 
 
+@settings(max_examples=200, deadline=None)
+@given(
+    domain=st.lists(st.floats(-50, 50), min_size=1, max_size=40, unique=True),
+    has_null=st.booleans(),
+    max_domain=st.integers(2, 48),
+    op=st.sampled_from(["=", "<", "<=", ">", ">="]),
+    val=st.one_of(st.floats(-60, 60), st.floats(allow_nan=True), st.integers(-60, 60)),
+)
+def test_predicate_mask_matches_bincount_of_direct_eval(domain, has_null, max_domain, op, val):
+    """Over random sorted float domains, the model-bin mask equals the raw
+    elementwise mask bincounted into model bins, byte for byte."""
+    from naru_spark.encoding import ColumnDictionary
+    from naru_spark.model.binning import ModelBinning
+    from naru_spark.predicates import NUMPY_OPS
+
+    values = np.sort(np.array(domain, dtype=np.float64))
+    d = ColumnDictionary("c", values, has_null=has_null)
+    b = ModelBinning(d, max_domain)
+    raw = np.concatenate([[False] * has_null, NUMPY_OPS[op](values, val)]).astype(np.float64)
+    expect = np.bincount(b.raw_to_model, weights=raw, minlength=b.model_size) / b.bin_counts
+    got = b.predicate_mask(op, val)
+    assert got.dtype == expect.dtype and got.tobytes() == expect.tobytes()
+
+
 @settings(max_examples=100, deadline=None)
 @given(
     domain=st.lists(st.integers(-50, 50), min_size=1, max_size=30, unique=True),
