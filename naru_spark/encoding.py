@@ -9,9 +9,12 @@ Reference semantics (/root/reference):
 - ``common.py:11-24``: NULL never satisfies any predicate -> the NULL bin is
   always False in a domain mask.
 
-Because the dictionary is sorted, a raw-value range predicate maps to a
-prefix/suffix of bin ids — every estimator exploits this by evaluating
-``op(all_distinct_values, v)`` as a vectorized mask (``estimators.py:226-230``).
+Because the dictionary is sorted, each ``=``/``<``/``<=``/``>``/``>=``
+predicate selects one contiguous run of bins. ``ColumnDictionary.bin_range``
+is the one "predicate -> bin range" translation: one ``searchsorted`` per
+predicate, never a scan of the dictionary. The reference evaluates
+``op(all_distinct_values, v)`` elementwise instead (``estimators.py:226-230``);
+every mask built from a range equals that evaluation bit for bit.
 
 Spark-first design (NOT MLlib StringIndexer, which orders by frequency and
 breaks range predicates):
@@ -34,6 +37,8 @@ whatever comes next.
 
 from __future__ import annotations
 
+import datetime
+import operator
 from dataclasses import dataclass
 
 import numpy as np
@@ -45,6 +50,9 @@ from naru_spark.meta import ColumnMeta, TableMeta
 
 # Domains larger than this stay distributed (DataFrame-backed dictionary).
 DEFAULT_MAX_COLLECT_DOMAIN = 4_000_000
+# searchsorted side whose index ends (<, <=) or starts (>, >=, =) the
+# bin range of ``col <op> val``
+_SEARCH_SIDE = {"=": "left", "<": "left", ">=": "left", "<=": "right", ">": "right"}
 
 
 @dataclass
@@ -121,24 +129,65 @@ class ColumnDictionary:
             return out
         return self.values[b]
 
-    def valid_bins_mask(self, op: str, val) -> np.ndarray:
-        """Boolean mask over the full bin domain for ``col <op> val``.
+    def bin_range(self, op: str, val) -> tuple[int, int]:
+        """Bins ``[lo, hi)`` satisfying ``col <op> val`` for op in
+        ``= < <= > >=``: one ``searchsorted`` into the sorted dictionary.
 
-        Reference ``estimators.py:219-236``: evaluate the raw-value predicate
-        once against the sorted dictionary. The NULL bin is always False
-        (common.py:11-24 — NULL never matches). ``'in'`` (beyond the
-        reference's op set) is the UNION of the per-value equality masks —
-        one vectorized isin over the domain.
+        Equals the elementwise evaluation of the op against every value
+        (``estimators.py:219-236``), literal edge cases included:
+
+        * a NULL/NaN/NaT literal matches nothing (``searchsorted`` would
+          place it last and select a suffix);
+        * a literal the elementwise op cannot order against the column (a
+          string on a numeric column, ``None``, a ``datetime.date`` or a
+          tz-aware ``Timestamp`` on a timestamp column) raises ``TypeError``,
+          except under ``=``, which matches nothing. ``searchsorted``
+          accepts some of these silently, so ``<`` is first tried on one
+          value.
+
+        The NULL bin is never in the range (``common.py:11-24``).
         """
-        from naru_spark.predicates import NUMPY_OPS
-
-        if op == "in":
-            inner = np.isin(self.values, np.asarray(list(val), dtype=self.values.dtype))
+        side = _SEARCH_SIDE[op]
+        v = self.values
+        shift = int(self.has_null)
+        try:
+            operator.lt(v[:1], val)
+        except TypeError:
+            if op == "=":
+                return shift, shift
+            raise
+        if pd.isnull(val):
+            return shift, shift
+        if v.dtype.kind == "M" and isinstance(val, datetime.datetime):
+            # exact, at the literal's own unit; searchsorted would otherwise
+            # compare by casting the whole dictionary to objects
+            val = pd.Timestamp(val).to_datetime64()
+        i = int(v.searchsorted(val, side))
+        if op == "=":
+            lo, hi = i, i + int(i < len(v) and v[i] == val)
+        elif op[0] == "<":
+            lo, hi = 0, i
         else:
-            inner = NUMPY_OPS[op](self.values, val)
-        if self.has_null:
-            return np.concatenate([[False], inner]).astype(bool)
-        return inner.astype(bool)
+            lo, hi = i, len(v)
+        return lo + shift, hi + shift
+
+    def in_bins(self, vals) -> np.ndarray:
+        """Sorted distinct bins of ``col IN vals``: the union of the ``=``
+        bins, so a literal matches here exactly when ``=`` matches it."""
+        bins = {lo for lo, hi in (self.bin_range("=", v) for v in vals) if hi > lo}
+        return np.array(sorted(bins), dtype=np.int64)
+
+    def valid_bins_mask(self, op: str, val) -> np.ndarray:
+        """Boolean mask over the full bin domain for ``col <op> val``,
+        filled from ``bin_range`` (``in_bins`` for ``'in'``, which is
+        beyond the reference's op set). The NULL bin is always False."""
+        mask = np.zeros(self.distribution_size, dtype=bool)
+        if op == "in":
+            mask[self.in_bins(val)] = True
+        else:
+            lo, hi = self.bin_range(op, val)
+            mask[lo:hi] = True
+        return mask
 
 
 def _collect_distinct(df: DataFrame, col: str) -> tuple[np.ndarray, bool]:

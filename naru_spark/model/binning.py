@@ -10,11 +10,14 @@ Bayes-net estimator for large domains (estimators.py:683-740,
 Semantics:
 - raw bin 0 (NULL) always maps to model bin 0 alone, so NULL-never-matches
   survives binning.
-- A predicate mask over raw bins maps to a FRACTIONAL mask over model bins:
+- A predicate maps to a FRACTIONAL mask over model bins:
   mask_m = (#matching raw bins in m) / (#raw bins in m) — the uniform-spread
   assumption inside a bucket (same as MaxDiff, estimators.py:1342-1374),
   which is exact for bins fully inside/outside the range and approximate
-  only at the two boundary bins.
+  only at the two boundary bins. Binning is monotone, so the matching raw
+  bins of a range predicate (``ColumnDictionary.bin_range``) overlap each
+  model bin in one run, and the mask is computed from the range ends
+  without touching the raw domain.
 - ``predicate_masks`` turns a conjunctive query into one such mask per model
   column (None = wildcard); repeated columns intersect by mask product.
 """
@@ -58,16 +61,25 @@ class ModelBinning:
     def encode(self, raw_bins: np.ndarray) -> np.ndarray:
         return self.raw_to_model[np.asarray(raw_bins, dtype=np.int64)]
 
-    def fractional_mask(self, raw_mask: np.ndarray) -> np.ndarray:
-        """Predicate mask over raw bins -> [0,1] weights over model bins."""
-        raw_mask = np.asarray(raw_mask, dtype=np.float64)
-        hits = np.bincount(self.raw_to_model, weights=raw_mask, minlength=self.model_size)
-        return hits / self.bin_counts
-
     def predicate_mask(self, op: str, val) -> np.ndarray:
-        """Fractional model-bin mask for ``col <op> val`` (NULL bin = 0)."""
-        raw = self.dictionary.valid_bins_mask(op, val)
-        return self.fractional_mask(raw)
+        """Fractional model-bin mask for ``col <op> val`` (NULL bin = 0):
+        the share of each model bin's raw bins that match.
+
+        ``raw_to_model`` is non-decreasing, so model bin ``m`` holds the raw
+        bins ``[ends[m] - bin_counts[m], ends[m])`` and its hits are its
+        overlap with the predicate's ``bin_range`` — O(model_size), with
+        the same integer counts over the same ``bin_counts`` as a
+        ``bincount`` of the raw mask. ``'in'`` counts its matching bins.
+        """
+        if op == "in":
+            hits = np.bincount(
+                self.raw_to_model[self.dictionary.in_bins(val)], minlength=self.model_size
+            )
+        else:
+            lo, hi = self.dictionary.bin_range(op, val)
+            ends = self.bin_counts.cumsum()
+            hits = np.maximum(np.minimum(ends, hi) - np.maximum(ends - self.bin_counts, lo), 0.0)
+        return hits / self.bin_counts
 
 
 def predicate_masks(q, columns: list[str], binnings: dict[str, ModelBinning]) -> list:

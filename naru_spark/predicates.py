@@ -22,7 +22,7 @@ Beyond the reference's surface (it stops at conjunctive range/equality):
 
 NULL semantics: a NULL never satisfies any predicate (``common.py:11-24``) —
 Spark SQL's three-valued logic gives this for free on the filter path; the
-domain-mask path gets it from ``ColumnDictionary.valid_bins_mask``.
+domain-mask path gets it from ``ColumnDictionary.bin_range``.
 """
 
 from __future__ import annotations

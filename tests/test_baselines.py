@@ -25,7 +25,8 @@ def lineitem_setup(spark):
     data = encoded.to_numpy(dtype=np.int64)
     wl = generate_workload(SF_SMOKE, meta, "lineitem", 15, seed=1234)
     truths = Oracle(df).query_batch(wl)
-    return df, enc, meta, data, cols, wl, truths
+    yield df, enc, meta, data, cols, wl, truths
+    df.unpersist()
 
 
 def test_maxdiff_sanity(lineitem_setup):

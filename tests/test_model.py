@@ -459,6 +459,23 @@ def test_identity_binning_small_domain():
     assert (b.predicate_mask("=", "b") == np.array([0.0, 1.0, 0.0])).all()
 
 
+@pytest.mark.parametrize("max_domain", [1024, 4])
+def test_in_is_union_of_equality_bins(max_domain):
+    """``in`` matches a literal exactly when ``=`` does: no cast to the
+    column dtype (``IN (2.5)`` on an int column matches nothing, as
+    ``= 2.5`` does), and a repeated literal counts once."""
+    d = ColumnDictionary("c", np.arange(10, dtype=np.int64), has_null=True)
+    b = ModelBinning(d, max_domain)
+    for vals, eq in (([2.5], 2.5), ([2, 2], 2), ([None], None), (["2"], "2")):
+        assert d.valid_bins_mask("in", vals).tobytes() == d.valid_bins_mask("=", eq).tobytes()
+        assert b.predicate_mask("in", vals).tobytes() == b.predicate_mask("=", eq).tobytes()
+    assert not d.valid_bins_mask("in", [2.5]).any()
+    assert (d.valid_bins_mask("in", [1, 7.0, 12]) == np.isin(np.arange(11), [2, 8])).all()
+    raw = d.valid_bins_mask("in", [0, 3, 9])
+    want = np.bincount(b.raw_to_model, weights=raw, minlength=b.model_size) / b.bin_counts
+    assert b.predicate_mask("in", [9, 0, 3]).tobytes() == want.tobytes()
+
+
 def test_column_masking_encoding():
     """MASK token: value bits zeroed, mask bit set; AR property intact."""
     m = ResMADE([5, 3, 7], hidden=16, blocks=1, seed=0, column_masking=True)
@@ -822,6 +839,33 @@ def test_update_order_exact_and_ar():
     m.update_order([0, 1, 2, 3])
     back = m.forward(x.copy(), grad=False)
     assert np.array_equal(back, base)
+
+
+def test_order_pin_survives_failing_query():
+    """An order-pinned estimator whose query raises (``<`` NULL) leaves the
+    shared multi-order model on its own ordering; the next query equals a
+    fresh estimator's, pinned or not."""
+    from naru_spark.estimators.progressive import ProgressiveSampling
+    from naru_spark.meta import TableMeta
+    from naru_spark.model.train import NaruModel
+    from naru_spark.predicates import Query
+
+    cols = ["a", "b", "c", "d"]
+    dicts = {c: ColumnDictionary(c, np.arange(6, dtype=np.int64), has_null=True) for c in cols}
+    binn = {c: ModelBinning(d, 4) for c, d in dicts.items()}
+    made = ResMADE([binn[c].model_size for c in cols], hidden=16, blocks=1, seed=0)
+    model = NaruModel(made, binn, TableMeta("t", [], 1000, dictionaries=dicts), cols)
+    pin = [3, 1, 0, 2]
+    pinned = ProgressiveSampling(model, num_samples=64, seed=1, order=pin)
+    q = Query("t", ["a", "c"], ["<=", ">"], [3, 1])
+    unpinned = ProgressiveSampling(model, num_samples=64, seed=1).query(q)
+    assert pinned.query(q) != unpinned  # the pin changes the estimate
+
+    with pytest.raises(TypeError):
+        pinned.query(Query("t", ["a", "b"], ["<=", "<"], [3, None]))
+    assert list(made.order) == [0, 1, 2, 3]
+    assert pinned.query(q) == ProgressiveSampling(model, num_samples=64, seed=1, order=pin).query(q)
+    assert ProgressiveSampling(model, num_samples=64, seed=1).query(q) == unpinned
 
 
 def test_order_cycled_single_model_ensemble():

@@ -197,9 +197,9 @@ def test_bpe_greedy_equals_rank_order_and_lossless(words, num_merges):
     seed=st.integers(0, 10_000),
 )
 def test_fractional_mask_conserves_mass(n_raw, max_domain, seed):
-    """For any raw-bin boolean mask, sum(fractional_mask * bin_counts) ==
-    number of raw bins selected — the mass-conservation property that makes
-    binned selectivities unbiased."""
+    """For any set of raw bins (an ``in`` predicate selecting them),
+    sum(mask * bin_counts) == number of raw bins selected — the
+    mass-conservation property that makes binned selectivities unbiased."""
     from naru_spark.encoding import ColumnDictionary
     from naru_spark.model.binning import ModelBinning
 
@@ -208,5 +208,5 @@ def test_fractional_mask_conserves_mass(n_raw, max_domain, seed):
     d = ColumnDictionary("c", values, has_null=False)
     b = ModelBinning(d, max_domain)
     raw_mask = rng.rand(n_raw) < 0.5
-    frac = b.fractional_mask(raw_mask.astype(np.float64))
+    frac = b.predicate_mask("in", list(values[raw_mask]))
     assert abs(float((frac * b.bin_counts).sum()) - raw_mask.sum()) < 1e-9
