@@ -2,18 +2,23 @@
 
 One walk answers every query (``ProgressiveSampling._walk``, reference
 ``estimators.py:134-418``). For each column in the model's ordering it takes
-the column's softmax given the sampled prefix and hands it to the shared
-sampling step (``model.made.sample_step``): multiply by the predicate's
-model-bin mask (``model.binning.predicate_masks``), multiply each path's
-weight by the masked mass, renormalize, draw the next value, write its
-encoding into the input buffer and forward again. Estimate = mean over
-samples of the path weights x cardinality (estimators.py:356-363).
+the column's unnormalised softmax weights given the sampled prefix, in the
+model's dtype, and runs the shared sampling step (``model.made``):
+``fold`` multiplies them by the predicate's model-bin mask
+(``model.binning.predicate_masks``), takes the cumsum and multiplies each
+path's weight by its masked share; ``draw`` picks the next value against
+that unnormalised cumsum. The walk writes the value's encoding into the
+input buffer and forwards again. It ends at the last filtered column, which
+only folds: nothing after it changes a path weight, so it makes no draw and
+later columns make no forward. Estimate = mean over samples of the path
+weights x cardinality (estimators.py:356-363).
 
 - Conjunctions and disjunctions share the walk: a disjunction expands by
   inclusion-exclusion (``predicates.ie_terms``) into conjunctive terms whose
   selectivities are summed before the final ceil.
-- ``query_weighted`` ends the walk at its weight column with E[w | prefix]
-  folded into the path weights instead of a draw.
+- ``query_weighted`` folds its per-bin weights at the weight column in
+  place of a mask, so E[w | prefix] joins the path weights; that column is
+  last in the ordering, so the walk ends there.
 - ``SampleFromModel`` and ``BayesNet`` reuse the same mask builder and
   sampling step.
 
@@ -39,7 +44,7 @@ import numpy as np
 
 from naru_spark.estimators.base import CardEst
 from naru_spark.model.binning import predicate_masks
-from naru_spark.model.made import sample_step, softmax
+from naru_spark.model.made import draw, fold, row_weights
 from naru_spark.model.train import NaruModel
 from naru_spark.predicates import Query, ie_terms
 
@@ -112,31 +117,34 @@ class ProgressiveSampling(CardEst):
 
     def _walk(self, q: Query, weight: tuple[int, np.ndarray] | None = None) -> float:
         """Mean path weight of ``num_samples`` progressive samples of the
-        conjunctive ``q``. ``weight = (column, per-bin weights)`` ends the
-        walk at that column, folding E[w | prefix] into each path."""
+        conjunctive ``q``. ``weight = (column, per-bin weights)`` folds
+        E[w | prefix] into each path at that column, like a mask."""
         rng = np.random.RandomState(self.seed)
         made = self.model.made
         S = self.num_samples
         masks = predicate_masks(q, self.model.columns, self.model.binnings)
-        wi = weight[0] if weight is not None else None
+        if weight is not None:
+            masks[weight[0]] = weight[1]
+        # the walk ends at the last column that folds into p: later columns
+        # never touch p, so their forwards and draws are dead work
+        order = list(made.order)
+        n = max((i + 1 for i, c in enumerate(order) if masks[c] is not None), default=0)
 
         made.begin_sampling(S)
         bits = made.new_input_buffer(S)
         p = np.ones(S, dtype=np.float64)
         # the model's ordering (reference estimators.py:370-389)
-        for c in made.order:
-            if masks[c] is None and made.column_masking and c != wi:
+        for i, c in enumerate(order[:n]):
+            if masks[c] is None and made.column_masking:
                 # wildcard short-circuit (estimators.py:238-255): the model
                 # was trained with masked inputs, so writing the MASK token
                 # and skipping this column's forward + sampling is sound —
                 # forwards per query = #filtered columns, not #columns.
                 made.write_mask_token(bits, c)
                 continue
-            probs = softmax(made.sample_logits_for_col(c, bits))
-            if c == wi:
-                p *= probs @ weight[1]
-                break
-            made._write_bits(bits, c, sample_step(probs, masks[c], p, rng))
+            cum = fold(row_weights(made.sample_logits_for_col(c, bits)), masks[c], p)
+            if i + 1 < n:
+                made._write_bits(bits, c, draw(cum, rng))
         return float(p.mean())
 
     def query_batch(self, queries: list[Query], threads: int | None = None):

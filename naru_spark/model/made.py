@@ -29,37 +29,54 @@ def _relu(x):
     return np.maximum(x, 0.0)
 
 
-def softmax(lg: np.ndarray) -> np.ndarray:
-    """Row-wise softmax of one column's [S, domain] logits, in their dtype."""
-    probs = np.exp(lg - lg.max(axis=1, keepdims=True))
-    probs /= probs.sum(axis=1, keepdims=True)
-    return probs
+def row_weights(lg: np.ndarray) -> np.ndarray:
+    """Unnormalised softmax weights ``exp(lg - max)`` of one column's
+    [S, domain] logits, in their dtype; each row's largest weight is 1."""
+    w = lg - lg.max(axis=1, keepdims=True)
+    return np.exp(w, out=w)
+
+
+def fold(w: np.ndarray, mask: np.ndarray | None, p: np.ndarray | None) -> np.ndarray:
+    """Fold a predicate's model-bin ``mask`` into S rows of one column's
+    unnormalised weights ``w`` and return their cumsum, all in ``w``'s
+    dtype. ``w`` is overwritten. With a mask, each row's path weight ``p``
+    is multiplied in place by its masked share ``s / z`` (``s`` the masked
+    mass, ``z`` the row's total: at least 1 for ``row_weights``, 1 for the
+    sampling BayesNet's CPD rows); a vanished row (``s == 0``) gets weight
+    0. ``mask`` None = unfiltered: ``p`` is untouched. The mask may be any
+    non-negative per-bin vector: ``query_weighted`` folds its per-bin
+    weights here, so ``p`` gains E[w | prefix]."""
+    if mask is not None:
+        z = w.sum(axis=1)
+        w *= mask.astype(w.dtype, copy=False)
+    cum = np.cumsum(w, axis=1, out=w)
+    if mask is not None:
+        p *= cum[:, -1] / z
+    return cum
+
+
+def draw(cum: np.ndarray, rng: np.random.RandomState) -> np.ndarray:
+    """Draw one bin per row from the unnormalised cumsum ``cum``: the
+    number of bins whose cumsum lies below ``t = u * s`` (``s = cum[:, -1]``,
+    ``u`` uniform in [0, 1)). Rounding keeps ``t <= s``, so the count never
+    passes the last bin. A zero-weight bin never wins a row with mass; a
+    vanished row (``s == 0``) draws bin 0 (reference estimators.py:278-279)."""
+    t = (rng.rand(len(cum), 1) * cum[:, -1:]).astype(cum.dtype)
+    return np.count_nonzero(t > cum, axis=1)
 
 
 def sample_step(
-    probs: np.ndarray,
+    w: np.ndarray,
     mask: np.ndarray | None,
     p: np.ndarray | None,
     rng: np.random.RandomState,
 ) -> np.ndarray:
-    """One progressive-sampling step over S rows of one column's
-    distribution ``probs``: fold in the predicate's model-bin ``mask``
-    (None = unfiltered, ``p`` untouched), multiply each row's path weight
-    ``p`` in place by its masked mass, renormalize and draw one bin per row.
-    A vanished path (mass 0, weight already 0) draws bin 0 (reference
-    estimators.py:278-279); a draw past a cumsum that rounds below 1 is
-    clipped to the last bin."""
-    if mask is not None:
-        masked = probs * mask[None, :]
-        s = masked.sum(axis=1)
-        p *= s
-        safe = np.where(s > 0, s, 1.0)
-        probs = masked / safe[:, None]
-        probs[s <= 0] = 0
-        probs[s <= 0, 0] = 1.0
-    cum = probs.cumsum(axis=1)
-    u = rng.rand(len(probs), 1)
-    return np.minimum((u > cum).sum(axis=1), probs.shape[1] - 1)
+    """One progressive-sampling step over S rows of one column: ``fold``
+    the mask into the weights ``w`` (and ``p``), then ``draw`` one bin per
+    row from the result. Used by ``ResMADE.sample`` and the sampling
+    BayesNet, which passes CPD rows as ``w``; the sampler walk calls
+    ``fold`` and ``draw`` itself, because its last column only folds."""
+    return draw(fold(w, mask, p), rng)
 
 
 class MaskedLinear:
@@ -118,6 +135,10 @@ class MaskedLinear:
             self._wm = wm = np.empty_like(self.W)
         np.multiply(self.W, self.M, out=wm)
         return wm
+
+    def wm_cols(self, lo: int, hi: int) -> np.ndarray:
+        """``(W*M)[:, lo:hi]``, multiplying only that slice."""
+        return self.W[:, lo:hi] * self.M[:, lo:hi]
 
     def __getstate__(self):
         # scratch never travels: _wm/_out_tl are derived, _x is per-call
@@ -570,15 +591,14 @@ class ResMADE:
         for the direct-IO slice)."""
         if self.output_encoding == "embed":
             E = self.embed_size
-            sl = slice(c * E, (c + 1) * E)
-            zc = _relu(h) @ self.lin_out.Wm[:, sl] + self.lin_out.b[sl]
-            if self.lin_direct is not None:
-                zc = zc + self._x_in @ self.lin_direct.Wm[:, sl] + self.lin_direct.b[sl]
-            return zc @ self._emb_table(c).T
-        lo, hi = self.out_offsets[c], self.out_offsets[c + 1]
-        out = _relu(h) @ self.lin_out.Wm[:, lo:hi] + self.lin_out.b[lo:hi]
+            return self._head(h, c * E, (c + 1) * E) @ self._emb_table(c).T
+        return self._head(h, self.out_offsets[c], self.out_offsets[c + 1])
+
+    def _head(self, h: np.ndarray, lo: int, hi: int) -> np.ndarray:
+        """Output units ``lo:hi``, masking only that slice of the weights."""
+        out = _relu(h) @ self.lin_out.wm_cols(lo, hi) + self.lin_out.b[lo:hi]
         if self.lin_direct is not None:
-            out = out + self._x_in @ self.lin_direct.Wm[:, lo:hi] + self.lin_direct.b[lo:hi]
+            out = out + self._x_in @ self.lin_direct.wm_cols(lo, hi) + self.lin_direct.b[lo:hi]
         return out
 
     # ----------------------------------------------------------------- nll
@@ -699,7 +719,7 @@ class ResMADE:
         x = np.zeros((n, self.D), dtype=np.int64)
         bits = self.new_input_buffer(n)
         for c in self.order:
-            x[:, c] = sample_step(softmax(self.sample_logits_for_col(c, bits)), None, None, rng)
+            x[:, c] = sample_step(row_weights(self.sample_logits_for_col(c, bits)), None, None, rng)
             self._write_bits(bits, c, x[:, c])
         return x
 

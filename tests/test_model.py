@@ -868,6 +868,50 @@ def test_order_pin_survives_failing_query():
     assert ProgressiveSampling(model, num_samples=64, seed=1).query(q) == unpinned
 
 
+@pytest.mark.parametrize("column_masking", [False, True])
+def test_walk_ends_at_last_filtered_column(column_masking):
+    """The walk forwards up to its last filtered column and no further. A
+    non-masking model filtered only at order position 1 makes 2 forwards,
+    not 4, and its selectivity equals a full walk whose trailing columns
+    carry an always-true filter. A column-masking model makes one forward
+    per filtered column. Estimates equal the threaded batch's, and
+    ``query_weighted`` with unit weights equals ``query``."""
+    from naru_spark.estimators.progressive import ProgressiveSampling
+    from naru_spark.meta import TableMeta
+    from naru_spark.model.train import NaruModel
+    from naru_spark.predicates import Query
+
+    cols = ["a", "b", "c", "d"]
+    dicts = {c: ColumnDictionary(c, np.arange(6, dtype=np.int64), has_null=False) for c in cols}
+    binn = {c: ModelBinning(d, 8) for c, d in dicts.items()}
+    made = ResMADE([6] * 4, hidden=16, blocks=1, seed=0, order=[2, 0, 3, 1], column_masking=column_masking)
+    model = NaruModel(made, binn, TableMeta("t", [], 1000, dictionaries=dicts), cols)
+    calls = []
+    forward = made.sample_logits_for_col
+    made.sample_logits_for_col = lambda c, bits: calls.append(c) or forward(c, bits)
+    ps = ProgressiveSampling(model, num_samples=64, seed=3)
+
+    q = Query("t", ["a"], ["<="], [2])
+    sel = ps._walk(q)
+    assert calls == ([0] if column_masking else [2, 0])
+    if not column_masking:
+        full = Query("t", ["a", "d", "b"], ["<=", ">=", ">="], [2, 0, 0])
+        assert ps._walk(full) == pytest.approx(sel, rel=1e-6)
+
+    calls.clear()
+    ps.query(Query("t", ["a", "d"], ["<=", ">"], [2, 1]))
+    assert calls == ([0, 3] if column_masking else [2, 0, 3])
+
+    calls.clear()
+    weighted = ps.query_weighted(q, "b", np.ones(6))
+    assert calls == ([0, 1] if column_masking else [2, 0, 3, 1])
+    assert weighted == ps.query(q)
+
+    qs = [Query("t", ["a", "c"], [">", "<"], [v, 5 - v]) for v in range(4)] * 2
+    seq = [ps.query(x) for x in qs]
+    assert ps.query_batch(qs, threads=4) == seq
+
+
 def test_order_cycled_single_model_ensemble():
     """ONE multi-mask model cycling two orderings during training, then
     ensembled across its own orderings at query time — the 1x-training

@@ -3,6 +3,8 @@ engine's correctness rests on — no SparkSession, so hundreds of generated
 cases run in seconds:
 
 - dictionary predicate masks == direct evaluation over the domain;
+- the sampling step's fold and draw: no zero-weight draws, silent vanished
+  rows, the masked share as path weight, one dtype;
 - inclusion-exclusion expansion == exact set-union cardinality;
 - the running-max-end interval-union increment == brute-force union length;
 - greedy BPE encoding is lossless and equals apply-merges-in-rank-order;
@@ -77,6 +79,58 @@ def test_valid_bins_mask_in_is_union_of_equalities(domain, vals):
     for v in vals:
         expect |= d.valid_bins_mask("=", v)
     assert (got == expect).all()
+
+
+# --------------------------------------------------------- sampling step
+_weight = st.one_of(st.just(0.0), st.floats(1e-3, 1.0))
+_mask_entry = st.one_of(st.just(0.0), st.just(1.0), st.floats(1e-3, 1.0))
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    dtype=st.sampled_from([np.float32, np.float64]),
+    d=st.integers(1, 24),
+    rows=st.integers(1, 6),
+    seed=st.integers(0, 2**31 - 1),
+    data=st.data(),
+)
+def test_sampling_step_fold_and_draw(dtype, d, rows, seed, data):
+    """Over softmax-like weights (each row's largest weight 1) and
+    fractional masks: a row with mass never draws a bin of zero masked
+    weight; a vanished row gets path weight 0 and draws bin 0, silently;
+    the path-weight factor is the masked share; the cumsum keeps ``w``'s
+    dtype."""
+    import warnings
+
+    from naru_spark.model.made import draw, fold, sample_step
+
+    w = np.array(data.draw(st.lists(st.lists(_weight, min_size=d, max_size=d), min_size=rows, max_size=rows)))
+    w[np.arange(rows), data.draw(st.lists(st.integers(0, d - 1), min_size=rows, max_size=rows))] = 1.0
+    mask = np.array(data.draw(st.lists(_mask_entry, min_size=d, max_size=d)))
+    if (mask == 0).any():
+        w = np.vstack([w, mask == 0])  # a row whose whole mass is masked out
+    w = w.astype(dtype)
+    masked = w * mask.astype(dtype)
+    share = (w.astype(np.float64) * mask).sum(axis=1) / w.astype(np.float64).sum(axis=1)
+
+    p = np.full(len(w), 0.5)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        cum = fold(w.copy(), mask, p)
+        got = draw(cum, np.random.RandomState(seed))
+    assert cum.dtype == dtype
+    assert ((got >= 0) & (got < d)).all()
+    assert not np.isnan(p).any()
+    np.testing.assert_allclose(p, 0.5 * share, rtol=1e-5)
+    alive = masked.sum(axis=1) > 0
+    assert (masked[alive, got[alive]] > 0).all()
+    assert (p[~alive] == 0).all() and (got[~alive] == 0).all()
+    again = sample_step(w.copy(), mask, np.full(len(w), 0.5), np.random.RandomState(seed))
+    assert (again == got).all()
+
+    p = np.full(len(w), 0.5)
+    cum = fold(w.copy(), None, p)
+    assert cum.dtype == dtype and (p == 0.5).all()  # unfiltered: p untouched
 
 
 # ----------------------------------------------------- inclusion-exclusion
