@@ -384,3 +384,134 @@ def test_like_estimator_gram_cap(spark):
     # the hot anchored prefix survives the cap and stays exact
     full.query_anchored(hot, "prefix")
     assert capped.query_anchored(hot, "prefix") == full.query_anchored(hot, "prefix") > 0
+
+
+# ------------------------------------------------- Spark-semantics differential
+@pytest.fixture(scope="module")
+def semantics_frame(spark):
+    """Six typed columns with NULL, NaN, +-inf, '' and non-ASCII values, in
+    two partitions, one of them empty."""
+    import datetime as dt
+    from decimal import Decimal as D
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("i", T.LongType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("dt", T.DateType()),
+        T.StructField("dec", T.DecimalType(12, 2)),
+    ])
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, 1.5, "a", dt.datetime(2024, 1, 1), dt.date(2024, 1, 1), D("1.50")),
+        (2, nan, "", None, dt.date(2024, 1, 2), None),
+        (3, inf, None, dt.datetime(2024, 1, 2, 12), dt.date(2024, 2, 1), D("-3.25")),
+        (-4, -inf, "é", dt.datetime(2023, 12, 31, 23, 59, 59, 999999), dt.date(2023, 12, 31), D("0.00")),
+        (5, None, "Zz", dt.datetime(2024, 1, 1, 0, 0, 0, 1), dt.date(2024, 1, 1), D("9999999999.99")),
+        (6, 2.0, "日本", dt.datetime(2024, 1, 1), dt.date(2024, 1, 1), D("2.00")),
+        (None, 0.0, "a", dt.datetime(2024, 1, 1, 23), None, D("1.50")),
+        (2, nan, "ab", dt.datetime(1999, 6, 30, 8, 30), dt.date(1999, 6, 30), D("-0.01")),
+    ]
+    rdd = spark.sparkContext.parallelize([rows, []], 2).flatMap(lambda part: part)
+    # materialized once, but not cached: the in-memory relation's batch
+    # pruning reads no row as NaN, and its filter then disagrees with
+    # Spark's own NaN semantics
+    df = spark.createDataFrame(rdd, schema).localCheckpoint()
+    assert df.rdd.glom().map(len).collect() == [len(rows), 0]
+    return df
+
+
+def _semantics_literals():
+    """(column, literal) pairs: in-domain, boundary and out-of-domain
+    values; NULL; NaN; +-inf; an int literal on the double column and a
+    float literal on the int column; Decimal, date, datetime and a
+    tz-aware Timestamp; plus pairs Spark itself rejects."""
+    import datetime as dt
+    from decimal import Decimal as D
+
+    import pandas as pd
+
+    nan, inf = float("nan"), float("inf")
+    return {
+        "i": [2, -4, 6, 100, -100, None, nan, inf, -inf, 2.5, -3.5, 1e20, D("2"), D("2.5"), True, "x"],
+        "d": [1.5, 2.0, 0.0, -0.0, 2, -1, 1e300, None, nan, inf, -inf, D("1.5"), "x"],
+        "s": ["a", "", "ab", "é", "日本", "Zz", "zzz", "A", None, 5],
+        "ts": [
+            dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 1, 0, 0, 0, 1),
+            dt.datetime(2023, 12, 31, 23, 59, 59, 999999), dt.datetime(1900, 1, 1), dt.datetime(2100, 1, 1),
+            dt.date(2024, 1, 1), pd.Timestamp("2024-01-01 01:00", tz="Europe/Paris"),
+            pd.Timestamp("2024-01-02 12:00"), None, 5, 1.5,
+        ],
+        "dt": [
+            dt.date(2024, 1, 1), dt.date(2023, 12, 31), dt.date(2024, 2, 1), dt.date(1970, 1, 1),
+            dt.datetime(2024, 1, 1, 12), pd.Timestamp("2024-01-02", tz="UTC"), None, 5,
+        ],
+        "dec": [
+            D("1.50"), D("1.505"), D("-3.25"), D("9999999999.99"), D("-0.01"), D("1E+1"), 2, 1.5,
+            1e-05, 1e20, None, nan, inf, "x", True,
+        ],
+    }
+
+
+def _semantics_queries():
+    """Every op on every (column, literal) pair, ``in`` lists with NULL,
+    multi-column conjunctions and 2-/3-branch disjunctions."""
+    import datetime as dt
+    from decimal import Decimal as D
+
+    from naru_spark.predicates import DisjunctiveQuery
+
+    singles = [
+        Query("t", [c], [op], [v])
+        for c, vs in _semantics_literals().items()
+        for v in vs
+        for op in ("=", "<", "<=", ">", ">=")
+    ]
+    ins = [
+        Query("t", ["i"], ["in"], [[1, None, 3, 2.5]]),
+        Query("t", ["d"], ["in"], [[float("nan"), 2.0, None]]),
+        Query("t", ["s"], ["in"], [["a", None, "é", "missing"]]),
+        Query("t", ["ts"], ["in"], [[dt.datetime(2024, 1, 1), None]]),
+        Query("t", ["dt"], ["in"], [[dt.date(2024, 1, 1), dt.date(1999, 6, 30)]]),
+        Query("t", ["dec"], ["in"], [[D("1.50"), None, 2]]),
+        Query("t", ["i"], ["in"], [[None]]),
+    ]
+    conj = [
+        Query("t", ["i", "s", "d"], [">=", "<", "<"], [1, "b", 3.0]),
+        Query("t", ["ts", "dec", "i"], [">=", ">", "<"], [dt.datetime(2024, 1, 1), D("0"), 6]),
+        Query("t", ["dt", "s", "i"], ["=", "in", ">"], [dt.date(2024, 1, 1), ["a", "Zz"], 0]),
+        Query("t", ["d", "d"], [">", "<"], [1.0, float("inf")]),
+        Query("t", ["s", "s"], [">=", "<="], ["", "a"]),
+        Query("t", ["i", "dec", "d"], [">", "<", "="], [-10, D("100"), float("nan")]),
+        Query("t", ["i", "s"], ["=", "="], [2, None]),
+    ]
+    b = conj + ins
+    disj = [
+        DisjunctiveQuery("t", [b[0], b[1]]),
+        DisjunctiveQuery("t", [b[2], b[3], b[4]]),
+        DisjunctiveQuery("t", [b[5], b[8], b[10]]),
+        DisjunctiveQuery("t", [b[6], Query("t", ["d"], [">="], [float("nan")])]),
+    ]
+    return singles + ins + conj + disj
+
+
+def test_batch_counts_follow_spark_filter_semantics(semantics_frame):
+    """Differential test: ``Oracle.query_batch`` equals Spark's own
+    ``filter(...).count()`` on every query Spark accepts, and raises on
+    every query Spark rejects."""
+    oracle = Oracle(semantics_frame)
+    ok, truths, rejected = [], [], []
+    for q in _semantics_queries():
+        try:
+            truths.append(oracle.query(q))
+            ok.append(q)
+        except Exception:  # noqa: BLE001 — Spark's analysis/cast errors
+            rejected.append(q)
+    assert len(ok) > 300 and len(rejected) > 20  # both sides are exercised
+    assert oracle.query_batch(ok) == truths
+    for q in rejected:
+        with pytest.raises(Exception):
+            oracle.query_batch([q])
