@@ -19,8 +19,8 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: seeded conjunctive-count workload answered exactly in one
-    conditional-aggregation scan over lineitem (SURVEY §2 B1 batch path)."""
+    """Flagship: seeded conjunctive-count workload answered in one exact-count
+    scan over lineitem (SURVEY §2 B1 batch path)."""
     from naru_spark.entry_queries import q_workload_oracle
 
     return q_workload_oracle(spark, SMOKE_SF_DIR)

@@ -640,7 +640,7 @@ def q_estimator_report_disjunctive(spark: SparkSession, sf_dir: str) -> DataFram
     scale = meta.cardinality / len(data)
 
     # Heuristic is excluded on purpose: its IE expansion multiplies into
-    # hundreds of conditional aggregates (a full scan family per chunk) —
+    # hundreds of single-predicate counts (one column pass each) —
     # its disjunctive bounds are pytest-gated instead, keeping this entry
     # to the model-local estimators that answer from fitted state
     ests = [

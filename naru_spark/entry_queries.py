@@ -407,8 +407,8 @@ def sql_workload_oracle_join() -> str:
 
 def q_workload_oracle_star3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact counts for the 3-TABLE star workload (conjunctions over
-    lineitem x orders x customer columns): one conditional-aggregation
-    scan over the two-key-join view. Full DuckDB oracle — the exact-count
+    lineitem x orders x customer columns): one exact-count scan
+    (``Oracle.query_batch``) over the two-key-join view. Full DuckDB oracle — the exact-count
     twin that hash-gates the psample_star3 model surface."""
     from naru_spark.estimators import Oracle
 
@@ -456,7 +456,7 @@ def sql_workload_oracle_star4() -> str:
 def q_workload_oracle_star5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact counts for the 5-TABLE star workload (conjunctions over
     lineitem x orders x customer x supplier x part columns): one
-    conditional-aggregation scan over the four-key-join view. Full
+    exact-count scan (``Oracle.query_batch``) over the four-key-join view. Full
     DuckDB oracle — the exact-count twin that hash-gates the
     psample_star5 model surface."""
     from naru_spark.estimators import Oracle
@@ -481,9 +481,8 @@ def sql_workload_oracle_star5() -> str:
 
 def q_workload_oracle_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact counts for the IN / OR-of-conjunctions workload — the same
-    ONE-scan conditional-aggregation batch as the conjunctive oracle
-    (spark_predicate OR-folds branches; Catalyst pushes the disjunctive
-    filter supersets into the scan). Also asserts the Heuristic
+    ONE-scan batch as the conjunctive oracle (``exact_counts`` ORs each
+    query's branch matches). Also asserts the Heuristic
     inclusion-exclusion path runs on every query (estimates are
     model-dependent, so only the exact counts are hash-gated)."""
     from naru_spark.estimators import Heuristic, Oracle
@@ -492,7 +491,7 @@ def q_workload_oracle_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame
     wl = list(disjunctive_workload())
     cards = Oracle(df).query_batch(wl)
     # exercise the approximate IE path end-to-end on a subset (its full
-    # expansion is hundreds of conditional aggregates — the hash gate only
+    # expansion is hundreds of single-predicate counts — the hash gate only
     # needs the exact counts, so 8 queries keep the smoke cheap; the full
     # workload's Heuristic behavior is covered in tests)
     meta = TableMeta("lineitem", [], df.count())

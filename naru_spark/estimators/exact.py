@@ -1,4 +1,4 @@
-"""Exact and cheap estimators — pure Spark DataFrame jobs.
+"""Exact and cheap estimators — Spark DataFrame jobs.
 
 Reference (/root/reference/estimators.py):
 - ``Oracle``        (505-536): exact conjunctive COUNT(*).
@@ -11,73 +11,302 @@ Reference (/root/reference/estimators.py):
 - ``Const``         (567-581): constant baseline.
 
 Scale design: the single-query path is a filter+count (Catalyst pushes every
-conjunct into the parquet scan). The *batch* path answers N queries in ONE
-scan via conditional aggregation::
+conjunct into the parquet scan). The *batch* path (``exact_counts``) answers
+N queries in ONE Spark job over one fixed plan::
 
-    df.agg(sum(when(pred_0, 1)), sum(when(pred_1, 1)), ...)
+    df.select(used_cols).mapInArrow(count_partition, "q int, n long")
 
-so a 2000-query workload costs one pass over the table instead of 2000 jobs —
-the difference between hours and minutes at 100 TB. Aggregates are chunked to
-keep codegen happy.
+The batch travels as data, a broadcast of typed per-query predicate lists,
+so no literal reaches the plan text and a fresh batch pays no SQL analysis
+or codegen. Each partition turns its Arrow batches into one numpy view per
+column and counts every query by *index narrowing*: the first predicate runs
+over the whole column, each later one only over the row indices that
+survived, and the query stops once none survive. A conjunction's predicates
+run in order of their selectivity on a fixed-stride sample of the partition;
+the order changes the work, never a count. The driver sums the partitions'
+count vectors.
+
+The counts equal Spark's own filter over ``predicates.spark_where``:
+
+* NULL never matches; ``in`` is the union of its ``=`` matches.
+* NaN equals NaN and sorts above +inf.
+* Integral and decimal columns are unscaled int64 at the column's scale; an
+  int, ``Decimal`` or decimal-form float literal (Spark parses ``2.5`` as a
+  DECIMAL) compares exactly, one Spark parses as a DOUBLE (``1e-05``,
+  ``inf``, NaN) compares against the column cast to double.
+* Strings are dictionary-coded per partition in code-point order, which is
+  Spark's binary UTF-8 order.
+* Timestamps and dates are UTC microseconds; a ``date`` is its midnight and
+  a tz-aware literal is converted to UTC.
+
+A literal/column pair it cannot compare exactly raises ``TypeError`` before
+any job runs.
 """
 
 from __future__ import annotations
 
 import math
+from datetime import date, datetime, timedelta, timezone
+from decimal import Decimal
+from fractions import Fraction
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from naru_spark.estimators.base import CardEst
 from naru_spark.meta import TableMeta
-from naru_spark.predicates import Query, spark_predicate
+from naru_spark.predicates import NUMPY_OPS, DisjunctiveQuery, Query, _bq, spark_predicate
 
-# Conditional aggregates per job; beyond this whole-stage codegen and the
-# constant pool start to degrade (measured: 240 aggs in one job is ~5x
-# slower than 4x60 run concurrently).
-BATCH_CHUNK = 64
+SAMPLE_ROWS = 4096  # size of the fixed-stride sample that orders predicates
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+_EPOCH = datetime(1970, 1, 1)
+_US = timedelta(microseconds=1)
+_DAY_US = 86_400_000_000
+# string ops on sorted distinct values: op -> (code op, searchsorted side)
+_CODE_OPS = {"<": ("<", "left"), "<=": ("<", "right"), ">": (">=", "right"), ">=": (">=", "left")}
 
 
-def _conditional_counts(df: DataFrame, queries: list[Query], chunk: int = BATCH_CHUNK) -> list[int]:
-    """N exact counts in ceil(N/chunk) scans via sum(when(pred,1)).
+# ------------------------------------------------------------- driver side
+def _column_kind(dtype) -> tuple[str, int]:
+    """How a column is held and compared: ``("int", scale)`` for integral
+    and decimal columns as unscaled int64, ``("float", 0)``, ``("str", 0)``,
+    or ``("time", 0)`` for timestamps and dates as UTC microseconds."""
+    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return "int", 0
+    if isinstance(dtype, T.DecimalType) and dtype.precision <= 15:
+        # <= 15 digits: the unscaled int64 casts to double exactly
+        return "int", dtype.scale
+    if isinstance(dtype, T.DoubleType):
+        return "float", 0
+    if isinstance(dtype, T.StringType) and getattr(dtype, "collation", "UTF8_BINARY") == "UTF8_BINARY":
+        return "str", 0
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+        return "time", 0
+    raise TypeError(f"exact batch counts cannot compare a {dtype.simpleString()} column")
 
-    Chunks run from concurrent driver threads: expression analysis/codegen
-    cost grows superlinearly with aggregate count, so several modest scans
-    scheduled in parallel beat one giant one.
-    """
-    from concurrent.futures import ThreadPoolExecutor
 
-    chunks = [queries[lo : lo + chunk] for lo in range(0, len(queries), chunk)]
+def _utc_us(v) -> int:
+    """A date/datetime literal as UTC microseconds (a date is its midnight)."""
+    if isinstance(v, np.datetime64):
+        return int(v.astype("datetime64[us]").astype(np.int64))
+    if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(timezone.utc).replace(tzinfo=None)
+        return (v - _EPOCH) // _US
+    return (v - _EPOCH.date()).days * _DAY_US
 
-    def run(batch: list[Query]) -> list[int]:
-        # each aggregate rendered as ONE F.expr string (same Catalyst
-        # expression as the old coalesce/sum/when Column build, ~5x fewer
-        # py4j round-trips per aggregate — see spark_predicate)
-        from naru_spark.predicates import spark_where
 
-        aggs = [
-            F.expr(
-                f"coalesce(sum(case when ({spark_where(q)}) then 1 end), 0)"
-            ).alias(f"q{i}")
-            for i, q in enumerate(batch)
-        ]
-        row = df.agg(*aggs).collect()[0]
-        return [int(row[f"q{i}"]) for i in range(len(batch))]
+def _int_test(op: str, r: Fraction):
+    """``x <op> r`` over integers x as one int64 comparison, or None when
+    no x satisfies it."""
+    if r.denominator != 1:
+        if op == "=":
+            return None
+        b, op = math.floor(r), ("<=" if op[0] == "<" else ">")
+    else:
+        b = int(r)
+    if not _I64_MIN <= b <= _I64_MAX:
+        # beyond int64: every row matches, or none does
+        every = op[0] == ("<" if b > _I64_MAX else ">")
+        return ("raw", ">=", _I64_MIN) if every else None
+    return "raw", op, b
 
-    if len(chunks) == 1:
-        return run(chunks[0])
-    out: list[int] = []
-    with ThreadPoolExecutor(max_workers=min(4, len(chunks))) as ex:
-        for res in ex.map(run, chunks):
-            out.extend(res)
-    return out
+
+def _test(kind: str, scale: int, op: str, v):
+    """``(view, op, value)``: Spark's ``col <op> v`` on a column of
+    ``kind`` as one numpy comparison on the partition's ``view`` of it
+    ("raw", or "dbl" for an exact column cast to double), or None when it
+    is never true."""
+    if v is None:
+        return None
+    if kind == "str":
+        if isinstance(v, str):
+            return "raw", op, v
+    elif kind == "time":
+        if isinstance(v, (date, np.datetime64)) and not pd.isnull(v):
+            return "raw", op, _utc_us(v)
+    elif isinstance(v, (int, float, Decimal, np.integer, np.floating)) and not isinstance(v, (bool, np.bool_)):
+        if isinstance(v, Decimal) and not v.is_finite():
+            raise TypeError(f"non-finite Decimal literal {v!r}")
+        if kind == "float":
+            return "raw", op, float(v)
+        if isinstance(v, (float, np.floating)):
+            f = float(v)
+            if not math.isfinite(f) or "e" in repr(f):
+                return "dbl", op, f  # Spark parses this literal as a DOUBLE
+            v = Decimal(repr(f))  # ... and this one as a DECIMAL
+        return _int_test(op, Fraction(v if isinstance(v, Decimal) else int(v)) * 10**scale)
+    raise TypeError(f"cannot compare a {kind} column with {v!r} exactly")
+
+
+def _compile(df: DataFrame, queries: list) -> tuple[DataFrame, list, list]:
+    """The batch as data: the projection of the used columns, their
+    ``(kind, scale)``, and per query its live branches, each a list of
+    ``(column position, tests)`` whose tests are OR-ed (``in``)."""
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    by_lower = {name.lower(): name for name in fields}
+    used: dict[str, int] = {}
+    kinds: list[tuple[str, int]] = []
+    plans = []
+    for q in queries:
+        branches = []
+        for b in q.branches if isinstance(q, DisjunctiveQuery) else [q]:
+            preds, live = [], True
+            for c, op, v in zip(b.cols, b.ops, b.vals):
+                name = c if c in fields else by_lower.get(c.lower())
+                if name is None:
+                    raise ValueError(f"no column {c!r} among {list(fields)}")
+                if name not in used:
+                    used[name] = len(kinds)
+                    kinds.append(_column_kind(fields[name]))
+                pos = used[name]
+                lits, op = (v, "=") if op == "in" else ([v], op)
+                tests = tuple(t for t in (_test(*kinds[pos], op, x) for x in lits) if t is not None)
+                live = live and bool(tests)
+                preds.append((pos, tests))
+            if live:
+                branches.append(preds)
+        plans.append(branches)
+    cols = [F.col(_bq(c)) for c in used] or [F.lit(0)]
+    return df.select(*cols), kinds, plans
+
+
+def exact_counts(df: DataFrame, queries: list) -> list[int]:
+    """Exact COUNT(*) of every (conjunctive or disjunctive) query in one
+    Spark job: one fixed ``mapInArrow`` plan over the used columns, the
+    batch shipped as a broadcast, one count vector per partition summed on
+    the driver."""
+    if not queries:
+        return []
+    sel, kinds, plans = _compile(df, queries)
+    bc = df.sparkSession.sparkContext.broadcast((kinds, plans))
+
+    def count_partition(batches):
+        yield from _partition_counts(batches, *bc.value)
+
+    try:
+        rows = sel.mapInArrow(count_partition, "q int, n long").collect()
+    finally:
+        bc.destroy()
+    out = np.zeros(len(queries), dtype=np.int64)
+    for r in rows:
+        out[r.q] += r.n
+    return out.tolist()
+
+
+# ---------------------------------------------------------- partition side
+class _Column:
+    """One column of a partition as numpy: ``x`` holds unscaled int64,
+    float64, UTC microseconds or, for strings, int32 codes into the sorted
+    distinct values ``uniq``; ``ok`` is the validity mask (None: no NULL)."""
+
+    def __init__(self, arr, kind: str, scale: int):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        self.ok = arr.is_valid().to_numpy(zero_copy_only=False) if arr.null_count else None
+        self.scale, self.uniq, self._dbl = scale, None, None
+        if kind == "str":
+            enc = arr.dictionary_encode()
+            order = pc.array_sort_indices(enc.dictionary).to_numpy()  # byte order
+            self.uniq = enc.dictionary.to_numpy(zero_copy_only=False)[order]
+            rank = np.empty(len(order), dtype=np.int32)
+            rank[order] = np.arange(len(order), dtype=np.int32)
+            idx = enc.indices.fill_null(0).to_numpy()
+            self.x = rank[idx] if len(rank) else np.zeros(len(arr), dtype=np.int32)
+        elif pa.types.is_decimal(arr.type):
+            # precision <= 15: the low word of each 128-bit value holds it
+            words = np.frombuffer(arr.buffers()[1], dtype="<i8")
+            self.x = words[2 * arr.offset : 2 * (arr.offset + len(arr)) : 2]
+        elif pa.types.is_date(arr.type):
+            self.x = arr.cast(pa.int32()).fill_null(0).to_numpy().astype(np.int64) * _DAY_US
+        elif pa.types.is_timestamp(arr.type):
+            self.x = arr.cast(pa.timestamp("us", arr.type.tz)).cast(pa.int64()).fill_null(0).to_numpy()
+        else:
+            to = pa.float64() if kind == "float" else pa.int64()
+            self.x = arr.cast(to).fill_null(0).to_numpy()
+        self.has_nan = kind == "float" and bool(np.isnan(self.x).any())
+
+    @property
+    def dbl(self) -> np.ndarray:
+        """The exact column cast to double, as Spark casts it."""
+        if self._dbl is None:
+            self._dbl = self.x.astype(np.float64) / 10.0**self.scale
+        return self._dbl
+
+    def localize(self, tests: tuple) -> tuple:
+        """String tests as comparisons of this partition's codes."""
+        if self.uniq is None:
+            return tests
+        out = []
+        for _, op, v in tests:
+            if op == "=":
+                i = int(np.searchsorted(self.uniq, v))
+                out.append(("raw", "=", i if i < len(self.uniq) and self.uniq[i] == v else -1))
+            else:
+                code_op, side = _CODE_OPS[op]
+                out.append(("raw", code_op, int(np.searchsorted(self.uniq, v, side))))
+        return tuple(out)
+
+    def match(self, tests: tuple, rows) -> np.ndarray:
+        """Which of ``rows`` (a slice or an index array) satisfy any test."""
+        m = None
+        for view, op, v in tests:
+            x = (self.dbl if view == "dbl" else self.x)[rows]
+            if v != v:  # NaN literal: equals NaN only, sorts above everything
+                nan = np.isnan(x)
+                t = nan if op in ("=", ">=") else (~nan if op == "<" else np.full(len(x), op == "<="))
+            else:
+                t = NUMPY_OPS[op](x, v)
+                if op[0] == ">" and view == "raw" and self.has_nan:
+                    t |= np.isnan(x)
+            m = t if m is None else (m | t)
+        return m if self.ok is None else (m & self.ok[rows])
+
+
+def _partition_counts(batches, kinds: list, plans: list):
+    """One partition's count vector ``(q, n)`` over the compiled batch."""
+    import pyarrow as pa
+
+    batches = list(batches)
+    n = sum(b.num_rows for b in batches)
+    if not n:
+        return
+    table = pa.Table.from_batches(batches)
+    cols = [_Column(table.column(i).combine_chunks(), *kind) for i, kind in enumerate(kinds)]
+    sample = slice(0, n, max(1, n // SAMPLE_ROWS))
+    counts = np.zeros(len(plans), dtype=np.int64)
+    for qi, branches in enumerate(plans):
+        hits = []
+        for preds in branches:
+            preds = [(cols[pos], cols[pos].localize(tests)) for pos, tests in preds]
+            preds.sort(key=lambda p: int(np.count_nonzero(p[0].match(p[1], sample))))
+            idx = None
+            for col, tests in preds:
+                m = col.match(tests, slice(None) if idx is None else idx)
+                idx = np.flatnonzero(m) if idx is None else idx[m]
+                if not len(idx):
+                    break
+            hits.append(np.arange(n) if idx is None else idx)
+        if len(hits) == 1:
+            counts[qi] = len(hits[0])
+        elif hits:
+            seen = np.zeros(n, dtype=bool)
+            for idx in hits:
+                seen[idx] = True
+            counts[qi] = np.count_nonzero(seen)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(np.arange(len(plans), dtype=np.int32)), pa.array(counts)], names=["q", "n"]
+    )
 
 
 class Oracle(CardEst):
     """Exact count (estimators.py:505-536)."""
 
     name = "oracle"
-    # query_batch is ONE amortized conditional-aggregation scan — its ms/q
-    # is not a per-query latency (reports carry this flag)
+    # query_batch is ONE amortized scan (exact_counts) — its ms/q is not a
+    # per-query latency (reports carry this flag)
     batch_scan = True
 
     def __init__(self, df: DataFrame, limit_first_n: int | None = None, order_col: str | None = None):
@@ -95,16 +324,16 @@ class Oracle(CardEst):
         return self.df.filter(spark_predicate(q)).count()
 
     def query_batch(self, queries: list[Query]) -> list[int]:
-        return _conditional_counts(self.df, queries)
+        return exact_counts(self.df, queries)
 
 
 class Heuristic(CardEst):
     """Independence-assumption estimate (estimators.py:480-502).
 
-    Per-column selectivity = exact matching count / cardinality, all columns
-    of all queries measured in one conditional-aggregation scan; product on
-    the driver. Multiplication order is the query's column order, so results
-    are bit-deterministic.
+    Per-column selectivity = exact matching count / cardinality, every
+    distinct single-column predicate of all queries counted in one
+    ``exact_counts`` scan; product on the driver. Multiplication order is the
+    query's column order, so results are bit-deterministic.
     """
 
     name = "heuristic"
@@ -122,7 +351,7 @@ class Heuristic(CardEst):
         # DisjunctiveQuery support: inclusion-exclusion expansion
         # (predicates.ie_terms) — every term is conjunctive, so the
         # per-column singles of ALL terms of ALL queries still ride ONE
-        # conditional-aggregation scan; a conjunctive query expands to
+        # exact_counts scan; a conjunctive query expands to
         # itself with coefficient 1. Same-column '='/'in' constraints
         # inside a merged term INTERSECT first (normalize_conjunct):
         # contradictory equalities from OR branches sharing a column
@@ -140,14 +369,10 @@ class Heuristic(CardEst):
         # seeded workloads repeat (col, op, val) constraints heavily
         # (measured: 222 singles -> 152 unique on the 30-query report
         # workload, 1984 -> 1004 on the 250-query paper slice), and each
-        # duplicate costs a conditional aggregate — expression analysis,
-        # codegen constant-pool pressure, and extra chunked scans (guide
-        # §1.2: don't compute things twice). Counts are exact per
-        # predicate, so reading a shared count per occurrence is
-        # bit-identical to the undeduped scan; the per-query
+        # duplicate costs one more column pass in every partition. Counts
+        # are exact per predicate, so reading a shared count per
+        # occurrence is bit-identical to the undeduped scan; the per-query
         # multiplication order below is unchanged.
-        from naru_spark.predicates import spark_where
-
         uniq_idx: dict = {}
         uniq_singles: list[Query] = []
         occ_idx: list[int] = []
@@ -156,17 +381,15 @@ class Heuristic(CardEst):
                 if t is None:
                     continue
                 for c, op, v in zip(t.cols, t.ops, t.vals):
-                    s = Query(t.table, [c], [op], [v])
-                    # key on the RENDERED predicate — the exact string the
-                    # aggregate is built from, so key-equal implies
-                    # count-equal by construction
-                    key = (t.table, spark_where(s))
+                    # the literal's type and repr pin its value, so
+                    # key-equal implies count-equal
+                    key = (c, op, type(v), repr(v))
                     k_u = uniq_idx.get(key)
                     if k_u is None:
                         k_u = uniq_idx[key] = len(uniq_singles)
-                        uniq_singles.append(s)
+                        uniq_singles.append(Query(t.table, [c], [op], [v]))
                     occ_idx.append(k_u)
-        uniq_counts = _conditional_counts(self.df, uniq_singles)
+        uniq_counts = exact_counts(self.df, uniq_singles)
         counts = [uniq_counts[i] for i in occ_idx]
         out, k = [], 0
         for qterms in terms:
@@ -206,7 +429,7 @@ class Sampling(CardEst):
         return self._scale(matched)
 
     def query_batch(self, queries: list[Query]) -> list[float]:
-        return [self._scale(m) for m in _conditional_counts(self.sample_df, queries)]
+        return [self._scale(m) for m in exact_counts(self.sample_df, queries)]
 
     def _scale(self, matched: int) -> float:
         if self.num_samples == 0:

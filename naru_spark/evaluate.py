@@ -9,8 +9,8 @@ Reference (/root/reference/eval_model.py):
   (est_name, err, est_card, true_card, query_dur_ms).
 
 Spark-first difference: truth and batchable estimators run through their
-one-pass ``query_batch`` path (one conditional-aggregation scan per chunk)
-instead of one Spark job per query — the reference's Ray-parallel eval
+one-pass ``query_batch`` path (one ``mapInArrow`` scan per batch, see
+``estimators.exact``) instead of one Spark job per query — the reference's Ray-parallel eval
 (eval_model.py:303-375) exists to hide exactly this per-query latency.
 """
 

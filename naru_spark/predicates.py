@@ -29,7 +29,9 @@ from __future__ import annotations
 
 import operator
 from dataclasses import dataclass, field
-from datetime import date, datetime
+from datetime import date, datetime, timezone
+from decimal import Decimal
+
 import numpy as np
 from pyspark.sql import Column as SparkCol, functions as F
 
@@ -203,10 +205,17 @@ def sql_literal(v) -> str:
             s = "NaN" if f != f else ("Infinity" if f > 0 else "-Infinity")
             return f"CAST('{s}' AS DOUBLE)"
         return repr(f)
+    if isinstance(v, Decimal) and v.is_finite():
+        # a bare numeric literal: both dialects parse it as a DECIMAL and
+        # compare it exactly (quoted, it would compare as a string cast)
+        return format(v, "f")
     if isinstance(v, (np.datetime64,)):
         ts = np.datetime_as_string(v, unit="us").replace("T", " ")
         return f"TIMESTAMP '{ts}'"
     if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            # the instant, as the UTC wall time both sessions read it in
+            v = v.astimezone(timezone.utc).replace(tzinfo=None)
         return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
     if isinstance(v, date):
         return f"DATE '{v.isoformat()}'"
@@ -242,7 +251,6 @@ def _bq(c: str) -> str:
 
 
 def spark_where(q) -> str:
-    """The predicate as a Spark-SQL WHERE string (backticked identifiers)
-    — for embedding in larger ``F.expr`` strings (conditional-count
-    aggregates); ``spark_predicate`` is this string parsed to a Column."""
+    """The predicate as a Spark-SQL WHERE string (backticked identifiers);
+    ``spark_predicate`` is this string parsed to a Column."""
     return _render_predicate(q, _bq)

@@ -10,7 +10,7 @@ from naru_spark.predicates import Query, sql_predicate
 from naru_spark.sources import load_table
 from naru_spark.sources.registry import ESTIMATOR_COLUMNS
 from naru_spark.workload import generate_workload
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, SF_T2
 
 
 @pytest.fixture(scope="module")
@@ -45,15 +45,57 @@ def test_workload_deterministic(lineitem):
         assert a.cols == b.cols and a.ops == b.ops and list(a.vals) == list(b.vals)
 
 
-def test_oracle_matches_duckdb(lineitem, workload, duck_smoke):
+def _duck_counts(con, queries) -> list[int]:
+    return [con.execute(f"SELECT COUNT(*) FROM lineitem WHERE {sql_predicate(q)}").fetchone()[0] for q in queries]
+
+
+def _t2_batch() -> list:
+    """A 256-query perfbench-shape batch over sf0.01 lineitem, its
+    disjunctive workload, and string, Decimal, timestamp and NULL literals."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from naru_spark.workload import (
+        generate_disjunctive_workload, generate_workload_from_pdf, load_table_pandas, pdf_table_meta,
+    )
+
+    cols = ESTIMATOR_COLUMNS["lineitem"]
+    pdf = load_table_pandas(SF_T2, "lineitem", cols)
+    meta = pdf_table_meta(pdf, "lineitem")
+    literals = [
+        Query("lineitem", ["l_returnflag", "l_linestatus"], ["<=", ">"], ["N", "F"]),
+        Query("lineitem", ["l_quantity", "l_discount"], ["<", ">="], [Decimal("10.5"), Decimal("0.05")]),
+        Query("lineitem", ["l_shipdate", "l_tax"], [">=", "<"], [dt.datetime(1995, 3, 15, 12), 0.04]),
+        Query("lineitem", ["l_shipdate"], ["<"], [dt.date(1993, 1, 1)]),
+        Query("lineitem", ["l_orderkey", "l_returnflag"], [">", "="], [100, None]),
+        Query("lineitem", ["l_linestatus"], ["in"], [["O", None]]),
+    ]
+    return (
+        generate_workload_from_pdf(pdf, meta, "lineitem", 256, seed=1)
+        + generate_disjunctive_workload(SF_T2, meta, "lineitem", 32, seed=5678)
+        + literals
+    )
+
+
+def test_oracle_matches_duckdb(spark, lineitem, workload, duck_smoke, duck_t2):
+    """Every batch count equals DuckDB's: the sf0.001 workload, then one
+    sf0.01 batch of perfbench-shape, disjunctive and typed-literal queries."""
     df, _ = lineitem
-    oracle = Oracle(df)
-    ests = oracle.query_batch(workload)
-    for q, est in zip(workload, ests):
-        truth = duck_smoke.execute(
-            f"SELECT COUNT(*) FROM lineitem WHERE {sql_predicate(q)}"
-        ).fetchone()[0]
-        assert est == truth, q
+    assert Oracle(df).query_batch(workload) == _duck_counts(duck_smoke, workload)
+    t2 = load_table(spark, "lineitem", SF_T2, ESTIMATOR_COLUMNS["lineitem"])
+    batch = _t2_batch()
+    assert Oracle(t2).query_batch(batch) == _duck_counts(duck_t2, batch)
+
+
+def test_empty_batch_and_contradiction_are_exact(lineitem):
+    """An empty batch counts nothing, and a conjunction of contradictory
+    equalities is exactly 0 for Oracle and Heuristic alike."""
+    df, meta = lineitem
+    h = Heuristic(df, meta)
+    assert Oracle(df).query_batch([]) == [] and h.query_batch([]) == []
+    q = Query("lineitem", ["l_returnflag", "l_returnflag"], ["=", "="], ["A", "N"])
+    assert h.query(q) == 0
+    assert Oracle(df).query_batch([q]) == [0]
 
 
 @pytest.fixture(scope="module")
@@ -513,5 +555,5 @@ def test_batch_counts_follow_spark_filter_semantics(semantics_frame):
     assert len(ok) > 300 and len(rejected) > 20  # both sides are exercised
     assert oracle.query_batch(ok) == truths
     for q in rejected:
-        with pytest.raises(Exception):
+        with pytest.raises(TypeError):
             oracle.query_batch([q])
