@@ -59,7 +59,6 @@ from naru_spark.meta import TableMeta
 from naru_spark.predicates import NUMPY_OPS, DisjunctiveQuery, Query, _bq, spark_predicate
 
 SAMPLE_ROWS = 4096  # size of the fixed-stride sample that orders predicates
-_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
 _EPOCH = datetime(1970, 1, 1)
 _US = timedelta(microseconds=1)
 _DAY_US = 86_400_000_000
@@ -79,7 +78,7 @@ def _column_kind(dtype) -> tuple[str, int]:
         return "int", dtype.scale
     if isinstance(dtype, T.DoubleType):
         return "float", 0
-    if isinstance(dtype, T.StringType) and getattr(dtype, "collation", "UTF8_BINARY") == "UTF8_BINARY":
+    if isinstance(dtype, T.StringType) and dtype.collation == "UTF8_BINARY":
         return "str", 0
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
         return "time", 0
@@ -98,19 +97,13 @@ def _utc_us(v) -> int:
 
 
 def _int_test(op: str, r: Fraction):
-    """``x <op> r`` over integers x as one int64 comparison, or None when
+    """``x <op> r`` over integers x as one integer comparison, or None when
     no x satisfies it."""
-    if r.denominator != 1:
-        if op == "=":
-            return None
-        b, op = math.floor(r), ("<=" if op[0] == "<" else ">")
-    else:
-        b = int(r)
-    if not _I64_MIN <= b <= _I64_MAX:
-        # beyond int64: every row matches, or none does
-        every = op[0] == ("<" if b > _I64_MAX else ">")
-        return ("raw", ">=", _I64_MIN) if every else None
-    return "raw", op, b
+    if r.denominator == 1:
+        return "raw", op, int(r)
+    if op == "=":
+        return None
+    return "raw", ("<=" if op[0] == "<" else ">"), math.floor(r)
 
 
 def _test(kind: str, scale: int, op: str, v):
@@ -145,7 +138,6 @@ def _compile(df: DataFrame, queries: list) -> tuple[DataFrame, list, list]:
     ``(kind, scale)``, and per query its live branches, each a list of
     ``(column position, tests)`` whose tests are OR-ed (``in``)."""
     fields = {f.name: f.dataType for f in df.schema.fields}
-    by_lower = {name.lower(): name for name in fields}
     used: dict[str, int] = {}
     kinds: list[tuple[str, int]] = []
     plans = []
@@ -154,13 +146,12 @@ def _compile(df: DataFrame, queries: list) -> tuple[DataFrame, list, list]:
         for b in q.branches if isinstance(q, DisjunctiveQuery) else [q]:
             preds, live = [], True
             for c, op, v in zip(b.cols, b.ops, b.vals):
-                name = c if c in fields else by_lower.get(c.lower())
-                if name is None:
+                if c not in fields:
                     raise ValueError(f"no column {c!r} among {list(fields)}")
-                if name not in used:
-                    used[name] = len(kinds)
-                    kinds.append(_column_kind(fields[name]))
-                pos = used[name]
+                if c not in used:
+                    used[c] = len(kinds)
+                    kinds.append(_column_kind(fields[c]))
+                pos = used[c]
                 lits, op = (v, "=") if op == "in" else ([v], op)
                 tests = tuple(t for t in (_test(*kinds[pos], op, x) for x in lits) if t is not None)
                 live = live and bool(tests)
@@ -259,7 +250,7 @@ class _Column:
                 t = nan if op in ("=", ">=") else (~nan if op == "<" else np.full(len(x), op == "<="))
             else:
                 t = NUMPY_OPS[op](x, v)
-                if op[0] == ">" and view == "raw" and self.has_nan:
+                if op[0] == ">" and self.has_nan:  # NaN sorts above v
                     t |= np.isnan(x)
             m = t if m is None else (m | t)
         return m if self.ok is None else (m & self.ok[rows])

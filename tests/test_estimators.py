@@ -458,9 +458,9 @@ def semantics_frame(spark):
         (2, nan, "ab", dt.datetime(1999, 6, 30, 8, 30), dt.date(1999, 6, 30), D("-0.01")),
     ]
     rdd = spark.sparkContext.parallelize([rows, []], 2).flatMap(lambda part: part)
-    # materialized once, but not cached: the in-memory relation's batch
-    # pruning reads no row as NaN, and its filter then disagrees with
-    # Spark's own NaN semantics
+    # materialized once, but not cached: a cached frame's batch pruning
+    # skips the NaN rows of `d = NaN` and `d > inf`, so its filter would
+    # disagree with Spark's own NaN semantics
     df = spark.createDataFrame(rdd, schema).localCheckpoint()
     assert df.rdd.glom().map(len).collect() == [len(rows), 0]
     return df
