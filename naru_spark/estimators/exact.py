@@ -10,23 +10,30 @@ Reference (/root/reference/estimators.py):
   values (bin-space hyper-rectangle volume).
 - ``Const``         (567-581): constant baseline.
 
-Scale design: the single-query path is a filter+count (Catalyst pushes every
-conjunct into the parquet scan). The *batch* path (``exact_counts``) answers
-N queries in ONE Spark job over one fixed plan::
+Scale design: every count, a single query's too, comes from
+``exact_counts``, which answers N queries in ONE Spark job over one fixed
+plan::
 
     df.select(used_cols).mapInArrow(count_partition, "q int, n long")
 
 The batch travels as data, a broadcast of typed per-query predicate lists,
 so no literal reaches the plan text and a fresh batch pays no SQL analysis
-or codegen. Each partition turns its Arrow batches into one numpy view per
-column and counts every query by *index narrowing*: the first predicate runs
-over the whole column, each later one only over the row indices that
-survived, and the query stops once none survive. A conjunction's predicates
-run in order of their selectivity on a fixed-stride sample of the partition;
-the order changes the work, never a count. The driver sums the partitions'
-count vectors.
+or codegen. Each partition reads its Arrow batches lazily and counts them in
+chunks of at least ``CHUNK_ROWS`` rows: while Python counts one chunk, the
+JVM keeps converting the next one to Arrow, and the worker holds one chunk
+at a time. A chunk becomes one numpy view per column, and every query is
+counted by *index narrowing*: the first predicate runs over the whole
+chunk, each later one only over the row indices that survived, and the
+query stops once none survive. A conjunction's predicates run in order of
+their selectivity on a fixed-stride sample of the chunk; the order changes
+the work, never a count. Chunks share no row, so each query's per-chunk
+counts (a disjunction's: the size of its per-chunk union) add up to the
+partition's count vector, and the driver sums the partitions' vectors.
 
-The counts equal Spark's own filter over ``predicates.spark_where``:
+The counts equal Spark's own filter over ``predicates.spark_where`` on a
+frame whose scan prunes nothing (a parquet or cached scan prunes row groups
+and batches by statistics that leave NaN out, so its filter can miss NaN
+matches; these counts do not):
 
 * NULL never matches; ``in`` is the union of its ``=`` matches.
 * NaN equals NaN and sorts above +inf.
@@ -34,7 +41,7 @@ The counts equal Spark's own filter over ``predicates.spark_where``:
   int, ``Decimal`` or decimal-form float literal (Spark parses ``2.5`` as a
   DECIMAL) compares exactly, one Spark parses as a DOUBLE (``1e-05``,
   ``inf``, NaN) compares against the column cast to double.
-* Strings are dictionary-coded per partition in code-point order, which is
+* Strings are dictionary-coded per chunk in code-point order, which is
   Spark's binary UTF-8 order.
 * Timestamps and dates are UTC microseconds; a ``date`` is its midnight and
   a tz-aware literal is converted to UTC.
@@ -56,9 +63,10 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from naru_spark.estimators.base import CardEst
 from naru_spark.meta import TableMeta
-from naru_spark.predicates import NUMPY_OPS, DisjunctiveQuery, Query, _bq, spark_predicate
+from naru_spark.predicates import NUMPY_OPS, DisjunctiveQuery, Query, _bq
 
 SAMPLE_ROWS = 4096  # size of the fixed-stride sample that orders predicates
+CHUNK_ROWS = 1 << 17  # rows a partition gathers before it counts them
 _EPOCH = datetime(1970, 1, 1)
 _US = timedelta(microseconds=1)
 _DAY_US = 86_400_000_000
@@ -108,7 +116,7 @@ def _int_test(op: str, r: Fraction):
 
 def _test(kind: str, scale: int, op: str, v):
     """``(view, op, value)``: Spark's ``col <op> v`` on a column of
-    ``kind`` as one numpy comparison on the partition's ``view`` of it
+    ``kind`` as one numpy comparison on the chunk's ``view`` of it
     ("raw", or "dbl" for an exact column cast to double), or None when it
     is never true."""
     if v is None:
@@ -133,11 +141,11 @@ def _test(kind: str, scale: int, op: str, v):
     raise TypeError(f"cannot compare a {kind} column with {v!r} exactly")
 
 
-def _compile(df: DataFrame, queries: list) -> tuple[DataFrame, list, list]:
-    """The batch as data: the projection of the used columns, their
-    ``(kind, scale)``, and per query its live branches, each a list of
-    ``(column position, tests)`` whose tests are OR-ed (``in``)."""
-    fields = {f.name: f.dataType for f in df.schema.fields}
+def _compile(schema: T.StructType, queries: list) -> tuple[list, list, list]:
+    """The batch as data: the used column names, their ``(kind, scale)``,
+    and per query its live branches, each a list of ``(column position,
+    tests)`` whose tests are OR-ed (``in``)."""
+    fields = {f.name: f.dataType for f in schema.fields}
     used: dict[str, int] = {}
     kinds: list[tuple[str, int]] = []
     plans = []
@@ -159,8 +167,7 @@ def _compile(df: DataFrame, queries: list) -> tuple[DataFrame, list, list]:
             if live:
                 branches.append(preds)
         plans.append(branches)
-    cols = [F.col(_bq(c)) for c in used] or [F.lit(0)]
-    return df.select(*cols), kinds, plans
+    return list(used), kinds, plans
 
 
 def exact_counts(df: DataFrame, queries: list) -> list[int]:
@@ -170,7 +177,8 @@ def exact_counts(df: DataFrame, queries: list) -> list[int]:
     the driver."""
     if not queries:
         return []
-    sel, kinds, plans = _compile(df, queries)
+    used, kinds, plans = _compile(df.schema, queries)
+    sel = df.select(*([F.col(_bq(c)) for c in used] or [F.lit(0)]))
     bc = df.sparkSession.sparkContext.broadcast((kinds, plans))
 
     def count_partition(batches):
@@ -188,7 +196,7 @@ def exact_counts(df: DataFrame, queries: list) -> list[int]:
 
 # ---------------------------------------------------------- partition side
 class _Column:
-    """One column of a partition as numpy: ``x`` holds unscaled int64,
+    """One column of a chunk as numpy: ``x`` holds unscaled int64,
     float64, UTC microseconds or, for strings, int32 codes into the sorted
     distinct values ``uniq``; ``ok`` is the validity mask (None: no NULL)."""
 
@@ -227,7 +235,7 @@ class _Column:
         return self._dbl
 
     def localize(self, tests: tuple) -> tuple:
-        """String tests as comparisons of this partition's codes."""
+        """String tests as comparisons of this chunk's codes."""
         if self.uniq is None:
             return tests
         out = []
@@ -256,21 +264,32 @@ class _Column:
         return m if self.ok is None else (m & self.ok[rows])
 
 
-def _partition_counts(batches, kinds: list, plans: list):
-    """One partition's count vector ``(q, n)`` over the compiled batch."""
+def _chunks(batches):
+    """The partition's Arrow batches, read lazily, as lists of batches
+    holding at least ``CHUNK_ROWS`` rows (the last one may hold fewer)."""
+    chunk, n = [], 0
+    for b in batches:
+        chunk.append(b)
+        n += b.num_rows
+        if n >= CHUNK_ROWS:
+            yield chunk, n
+            chunk, n = [], 0
+    if n:
+        yield chunk, n
+
+
+def _count_chunk(batches: list, n: int, kinds: list, plans: list, counts: np.ndarray) -> None:
+    """Add every query's count over one chunk of ``n`` rows to ``counts``."""
     import pyarrow as pa
 
-    batches = list(batches)
-    n = sum(b.num_rows for b in batches)
-    if not n:
-        return
-    table = pa.Table.from_batches(batches)
-    cols = [_Column(table.column(i).combine_chunks(), *kind) for i, kind in enumerate(kinds)]
+    cols = [_Column(pa.concat_arrays([b.column(i) for b in batches]), *kind) for i, kind in enumerate(kinds)]
     sample = slice(0, n, max(1, n // SAMPLE_ROWS))
-    counts = np.zeros(len(plans), dtype=np.int64)
     for qi, branches in enumerate(plans):
         hits = []
         for preds in branches:
+            if not preds:  # the branch filters no column: every row
+                hits = None
+                break
             preds = [(cols[pos], cols[pos].localize(tests)) for pos, tests in preds]
             preds.sort(key=lambda p: int(np.count_nonzero(p[0].match(p[1], sample))))
             idx = None
@@ -279,17 +298,33 @@ def _partition_counts(batches, kinds: list, plans: list):
                 idx = np.flatnonzero(m) if idx is None else idx[m]
                 if not len(idx):
                     break
-            hits.append(np.arange(n) if idx is None else idx)
-        if len(hits) == 1:
-            counts[qi] = len(hits[0])
+            hits.append(idx)
+        if hits is None:
+            counts[qi] += n
+        elif len(hits) == 1:
+            counts[qi] += len(hits[0])
         elif hits:
             seen = np.zeros(n, dtype=bool)
             for idx in hits:
                 seen[idx] = True
-            counts[qi] = np.count_nonzero(seen)
-    yield pa.RecordBatch.from_arrays(
-        [pa.array(np.arange(len(plans), dtype=np.int32)), pa.array(counts)], names=["q", "n"]
-    )
+            counts[qi] += np.count_nonzero(seen)
+
+
+def _partition_counts(batches, kinds: list, plans: list):
+    """One partition's count vector ``(q, n)`` over the compiled batch,
+    counted chunk by chunk as its Arrow batches arrive, so the JVM keeps
+    handing over the next chunk while this one is counted. Chunks share no
+    row, so their counts add up."""
+    import pyarrow as pa
+
+    counts, rows = np.zeros(len(plans), dtype=np.int64), 0
+    for chunk, n in _chunks(batches):
+        _count_chunk(chunk, n, kinds, plans, counts)
+        rows += n
+    if rows:
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.arange(len(plans), dtype=np.int32)), pa.array(counts)], names=["q", "n"]
+        )
 
 
 class Oracle(CardEst):
@@ -312,7 +347,7 @@ class Oracle(CardEst):
         self.df = df
 
     def query(self, q: Query) -> int:
-        return self.df.filter(spark_predicate(q)).count()
+        return self.query_batch([q])[0]
 
     def query_batch(self, queries: list[Query]) -> list[int]:
         return exact_counts(self.df, queries)
@@ -416,8 +451,7 @@ class Sampling(CardEst):
         self.name = f"sampling_{self.num_samples}"
 
     def query(self, q: Query) -> float:
-        matched = self.sample_df.filter(spark_predicate(q)).count()
-        return self._scale(matched)
+        return self.query_batch([q])[0]
 
     def query_batch(self, queries: list[Query]) -> list[float]:
         return [self._scale(m) for m in exact_counts(self.sample_df, queries)]

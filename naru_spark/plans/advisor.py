@@ -22,6 +22,7 @@ inclusion-exclusion. Anything else (LIKE, col-op-col, InSet) raises
 from __future__ import annotations
 
 import datetime as dt
+from decimal import Decimal
 
 from pyspark.sql import DataFrame
 
@@ -61,7 +62,8 @@ def _unwrap_cast(expr):
 
 def _literal_value(expr, data_type: str):
     """Convert a Catalyst Literal to the python value the predicate layer
-    expects. Timestamp literals carry epoch micros."""
+    expects. Timestamp literals carry epoch micros; a DECIMAL literal (SQL
+    ``0.05``) becomes a ``Decimal``."""
     v = expr.value()
     if v is None:
         raise UnsupportedPlanError("NULL literal in predicate")
@@ -71,6 +73,8 @@ def _literal_value(expr, data_type: str):
         return dt.datetime.fromisoformat(str(v))
     if isinstance(v, (int, float, bool)):
         return v
+    if str(expr.dataType().simpleString()).startswith("decimal"):
+        return Decimal(str(v))
     return str(v)  # UTF8String and friends
 
 

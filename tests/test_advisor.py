@@ -40,6 +40,17 @@ def test_flipped_operands_and_projection(li):
     assert adv.estimate(f) == li.filter(F.col("l_quantity") < 5).count()
 
 
+def test_sql_decimal_literal_on_double_column(li):
+    """A SQL ``0.05`` is a DECIMAL literal: it reaches the Query IR as a
+    ``Decimal`` and counts like Spark's own filter on a double column."""
+    from decimal import Decimal
+
+    f = li.filter("l_discount = 0.05 AND l_quantity > 30")
+    q = extract_query(f, "lineitem")
+    assert q.vals[q.cols.index("l_discount")] == Decimal("0.05")
+    assert CardinalityAdvisor(Oracle(li), "lineitem").estimate(f) == f.count() > 0
+
+
 def test_heuristic_routing(li):
     meta = TableMeta("lineitem", [], li.count())
     adv = CardinalityAdvisor(Heuristic(li, meta), "lineitem")

@@ -544,11 +544,13 @@ def test_batch_counts_follow_spark_filter_semantics(semantics_frame):
     """Differential test: ``Oracle.query_batch`` equals Spark's own
     ``filter(...).count()`` on every query Spark accepts, and raises on
     every query Spark rejects."""
+    from naru_spark.predicates import spark_where
+
     oracle = Oracle(semantics_frame)
     ok, truths, rejected = [], [], []
     for q in _semantics_queries():
         try:
-            truths.append(oracle.query(q))
+            truths.append(semantics_frame.filter(spark_where(q)).count())
             ok.append(q)
         except Exception:  # noqa: BLE001 — Spark's analysis/cast errors
             rejected.append(q)
@@ -557,3 +559,226 @@ def test_batch_counts_follow_spark_filter_semantics(semantics_frame):
     for q in rejected:
         with pytest.raises(TypeError):
             oracle.query_batch([q])
+
+
+def test_oracle_query_counts_nan_on_parquet_and_cached_frames(spark, tmp_path):
+    """A single query counts NaN matches that a parquet or cached scan's
+    statistics-based pruning drops: ``d = NaN``, ``d > 5.0`` and ``d > inf``
+    each match the NaN row, as in DuckDB."""
+    from types import SimpleNamespace
+
+    import duckdb
+    from pyspark.sql import types as T
+
+    nan, inf = float("nan"), float("inf")
+    schema = T.StructType([T.StructField("d", T.DoubleType())])
+    rows = [(1.0,), (nan,), (3.0,), (None,)]
+    path = str(tmp_path / "nan.parquet")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+    cached = spark.createDataFrame(rows, schema).cache()
+    sampling = Sampling(cached, SimpleNamespace(cardinality=4), p=1.0)  # its sample is cached too
+    frames = [spark.read.parquet(path), cached]
+    duck = duckdb.connect()
+    try:
+        for q in [Query("t", ["d"], [op], [v]) for op, v in (("=", nan), (">", 5.0), (">", inf))]:
+            truth = duck.execute(f"SELECT COUNT(*) FROM read_parquet('{path}/*.parquet') WHERE {sql_predicate(q)}").fetchone()[0]
+            assert truth == 1, sql_predicate(q)
+            for df in frames:
+                assert Oracle(df).query(q) == truth, sql_predicate(q)
+            assert sampling.query(q) == truth
+    finally:
+        duck.close()
+        sampling.sample_df.unpersist()
+        cached.unpersist()
+
+
+# ------------------------------------------------------------ chunked counting
+def _chunk_columns(n: int, seed: int = 7):
+    """bigint ``i``, double ``d`` and string ``s`` columns over ``n`` rows,
+    about a tenth NULL (and for ``d`` another tenth NaN), with string values
+    drawn from a window that moves along the rows."""
+    rng = np.random.default_rng(seed)
+    i = rng.integers(-50, 51, n)
+    d = np.round(rng.uniform(-10, 10, n), 1)
+    d[rng.random(n) < 0.1] = np.nan
+    d[rng.random(n) < 0.01] = np.inf
+    k = np.arange(n) // 40_000 * 4 + rng.integers(0, 10, n)
+    s = np.char.add("v", np.char.zfill(k.astype(str), 3))
+    return {c: (x, rng.random(n) >= 0.1) for c, x in (("i", i), ("d", d), ("s", s))}
+
+
+def _arrow_batches(cols: dict, sizes: list) -> list:
+    import pyarrow as pa
+
+    out, start = [], 0
+    for size in sizes:
+        sl = slice(start, start + size)
+        arrays = [pa.array(x[sl], mask=~ok[sl]) for x, ok in cols.values()]
+        out.append(pa.RecordBatch.from_arrays(arrays, names=list(cols)))
+        start += size
+    return out
+
+
+def _chunk_queries() -> list:
+    from naru_spark.predicates import DisjunctiveQuery
+
+    nan, inf = float("nan"), float("inf")
+    singles = [
+        Query("t", ["i"], ["="], [7]),
+        Query("t", ["i"], ["<"], [-20]),
+        Query("t", ["i"], [">="], [45]),
+        Query("t", ["d"], ["="], [nan]),
+        Query("t", ["d"], [">"], [5.0]),
+        Query("t", ["d"], [">"], [inf]),
+        Query("t", ["d"], ["<="], [0.0]),
+        Query("t", ["d"], ["="], [1.5]),
+        Query("t", ["d"], ["in"], [[nan, 2.0, None]]),
+        Query("t", ["s"], ["="], ["v005"]),
+        Query("t", ["s"], ["="], ["v030"]),
+        Query("t", ["s"], [">="], ["v012"]),
+        Query("t", ["s"], ["<"], ["v02"]),
+        Query("t", ["s"], ["in"], [["v001", "v033", None, "w"]]),
+        Query("t", ["i"], ["="], [None]),
+        Query("t", [], [], []),
+    ]
+    conj = [
+        Query("t", ["i", "d", "s"], [">", "<", ">="], [0, 3.0, "v010"]),
+        Query("t", ["d", "i"], ["=", "<"], [nan, 10]),
+        Query("t", ["s", "s", "d"], [">=", "<=", ">="], ["v008", "v020", inf]),
+        Query("t", ["i", "s"], ["in", "in"], [[1, 2, 3], ["v004", "v021"]]),
+    ]
+    disj = [
+        DisjunctiveQuery("t", [conj[0], singles[9]]),
+        DisjunctiveQuery("t", [conj[1], singles[5], singles[13]]),
+        DisjunctiveQuery("t", [singles[2], conj[3], Query("t", ["i"], ["="], [None])]),
+        DisjunctiveQuery("t", [singles[0], Query("t", [], [], [])]),
+    ]
+    return singles + conj + disj
+
+
+def _numpy_count(cols: dict, q) -> int:
+    """Spark's filter semantics by plain elementwise numpy: NULL never
+    matches, NaN equals NaN and sorts above every other double."""
+    from naru_spark.predicates import DisjunctiveQuery
+
+    n = len(next(iter(cols.values()))[0])
+
+    def match(c, op, v):
+        x, ok = cols[c]
+        if op == "in":
+            return np.logical_or.reduce([match(c, "=", u) for u in v])
+        if v is None:
+            return np.zeros(n, dtype=bool)
+        if x.dtype.kind == "f":  # order by (is NaN, value)
+            xn, vn = np.isnan(x), v != v
+            xv, vv = np.where(xn, 0.0, x), 0.0 if vn else v
+            lt, eq = (xn < vn) | ((xn == vn) & (xv < vv)), (xn == vn) & (xv == vv)
+        else:
+            lt, eq = x < v, x == v
+        return {"=": eq, "<": lt, "<=": lt | eq, ">": ~(lt | eq), ">=": ~lt}[op] & ok
+
+    def branch(b):
+        return np.logical_and.reduce([np.ones(n, dtype=bool)] + [match(*p) for p in zip(b.cols, b.ops, b.vals)])
+
+    branches = q.branches if isinstance(q, DisjunctiveQuery) else [q]
+    return int(np.count_nonzero(np.logical_or.reduce([branch(b) for b in branches])))
+
+
+def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
+    """Spark-free: a partition read in chunks counts exactly what one
+    whole-partition chunk and a plain numpy count do, and it reads its
+    batches lazily, so no evaluated chunk holds more than ``CHUNK_ROWS``
+    rows plus one input batch."""
+    from pyspark.sql import types as T
+
+    from naru_spark.estimators import exact
+
+    rng = np.random.default_rng(3)
+    sizes = [0]  # an empty batch, then batches of 1,000-20,000 rows
+    while sum(sizes) < 5 * exact.CHUNK_ROWS // 2:
+        sizes.append(int(rng.integers(1_000, 20_000)))
+    n = sum(sizes)
+    cols = _chunk_columns(n)
+    batches = _arrow_batches(cols, sizes)
+    schema = T.StructType([
+        T.StructField("i", T.LongType()), T.StructField("d", T.DoubleType()), T.StructField("s", T.StringType()),
+    ])
+    queries = _chunk_queries()
+    used, kinds, plans = exact._compile(schema, queries)
+    assert used == ["i", "d", "s"]
+
+    pulled = [0]
+    evaluated = []
+
+    def feed():
+        for b in batches:
+            pulled[0] += b.num_rows
+            yield b
+
+    count_chunk = exact._count_chunk
+
+    def recording(chunk, rows, *args):
+        assert pulled[0] == sum(evaluated) + rows  # nothing read ahead
+        assert rows <= exact.CHUNK_ROWS + max(sizes)
+        evaluated.append(rows)
+        count_chunk(chunk, rows, *args)
+
+    monkeypatch.setattr(exact, "_count_chunk", recording)
+    (out,) = list(exact._partition_counts(feed(), kinds, plans))
+    chunked = out.column(1).to_pylist()
+    assert out.column(0).to_pylist() == list(range(len(queries)))
+    assert len(evaluated) == 3 and sum(evaluated) == n
+
+    # NaN and NULL sit on both sides of every chunk boundary
+    d, d_ok = cols["d"]
+    for edge in np.cumsum(evaluated)[:-1]:
+        for side in (slice(edge - 100, edge), slice(edge, edge + 100)):
+            assert np.isnan(d[side]).any() and not d_ok[side].all() and not cols["i"][1][side].all()
+    # the string values differ from chunk to chunk
+    s = cols["s"][0]
+    assert not set(s[: evaluated[0]]) & set(s[-evaluated[-1]:])
+
+    whole = np.zeros(len(queries), dtype=np.int64)
+    count_chunk(batches, n, kinds, plans, whole)
+    assert chunked == whole.tolist() == [_numpy_count(cols, q) for q in queries]
+    assert all(0 < c < n for c in chunked[:10])  # the queries are selective
+    assert list(exact._partition_counts(iter([]), kinds, plans)) == []
+
+
+def test_oracle_counts_one_partition_larger_than_a_chunk(spark):
+    """One Spark partition holding more than two chunks: the batch counts
+    equal Spark's own filter count."""
+    from pyspark.sql import functions as F
+
+    from naru_spark.estimators.exact import CHUNK_ROWS
+    from naru_spark.predicates import DisjunctiveQuery, spark_where
+
+    idc = F.col("id")
+    df = spark.range(2 * CHUNK_ROWS + 17, numPartitions=1).select(
+        ((idc * 7919) % 1000 - 500).alias("i"),
+        F.when(idc % 13 == 0, F.lit(float("nan")))
+        .when(idc % 17 == 0, F.lit(None))
+        .otherwise((idc % 101) / 4.0)
+        .alias("d"),
+        F.when(idc % 19 == 0, F.lit(None))
+        .otherwise(F.format_string("v%03d", (idc / 50_000).cast("int") * 3 + idc % 7))
+        .alias("s"),
+    ).localCheckpoint()
+    assert df.rdd.getNumPartitions() == 1
+    nan = float("nan")
+    conj = [
+        Query("t", ["i", "d"], [">", "<"], [100, 12.5]),
+        Query("t", ["s", "d"], [">=", "="], ["v004", nan]),
+        Query("t", ["i", "s", "d"], ["<=", "in", ">"], [0, ["v001", "v010", None], 3.0]),
+    ]
+    batch = conj + [
+        Query("t", ["d"], ["="], [nan]),
+        Query("t", ["d"], [">"], [float("inf")]),
+        Query("t", ["s"], ["="], ["v012"]),
+        Query("t", ["s"], ["<"], ["v006"]),
+        Query("t", ["i"], ["in"], [[-500, 0, 499]]),
+        DisjunctiveQuery("t", [conj[0], conj[1]]),
+        DisjunctiveQuery("t", [conj[1], conj[2], Query("t", ["s"], ["="], ["v015"])]),
+    ]
+    truths = [df.filter(spark_where(q)).count() for q in batch]
+    assert all(truths) and Oracle(df).query_batch(batch) == truths
