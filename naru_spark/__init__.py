@@ -9,6 +9,8 @@ autoregressive density model is a numpy re-implementation trained from
 Spark-encoded data.
 """
 
+import sys
+
 __version__ = "0.1.0"
 
 __all__ = [
@@ -46,3 +48,34 @@ def __getattr__(name: str):
     import importlib
 
     return getattr(importlib.import_module(mod), name)
+
+
+def _reread_changed_zips_only() -> None:
+    """Backport of Python 3.12's lazy ``zipimporter.invalidate_caches``
+    (gh-103200). pyspark's worker calls ``importlib.invalidate_caches()``
+    at the start of every task, and on 3.11 every ``zipimporter`` then
+    re-reads its archive's whole directory: pyspark.zip alone has about a
+    dozen importers, and the re-reads cost 130-260 ms per task. An importer
+    now re-reads only when its archive's ``(st_mtime_ns, st_size,
+    st_ino)`` changed since it last did, so a rewritten zip is still seen."""
+    import os
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            reread(self)
+            return
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        if getattr(self, "_read_stamp", None) != stamp:
+            reread(self)
+            self._read_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+if sys.version_info < (3, 12):  # Spark's Python workers import naru_spark
+    _reread_changed_zips_only()

@@ -481,7 +481,7 @@ def sql_workload_oracle_star5() -> str:
 
 def q_workload_oracle_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact counts for the IN / OR-of-conjunctions workload — the same
-    ONE-scan batch as the conjunctive oracle (``exact_counts`` ORs each
+    ONE-scan batch as the conjunctive oracle (``ExactCounts`` ORs each
     query's branch matches). Also asserts the Heuristic
     inclusion-exclusion path runs on every query (estimates are
     model-dependent, so only the exact counts are hash-gated)."""

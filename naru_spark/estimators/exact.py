@@ -10,18 +10,22 @@ Reference (/root/reference/estimators.py):
   values (bin-space hyper-rectangle volume).
 - ``Const``         (567-581): constant baseline.
 
-Scale design: every count, a single query's too, comes from
-``exact_counts``, which answers N queries in ONE Spark job over one fixed
-plan::
+Scale design: every count, a single query's too, comes from one
+``ExactCounts`` holder per estimator. Its first batch converts the table to
+Arrow once: a ``mapInArrow`` pass over the columns the evaluator can compare
+gathers each partition's Arrow batches into chunks of at least
+``CHUNK_ROWS`` rows (or ``CHUNK_BYTES`` bytes) and writes each chunk as one
+Arrow IPC blob; a round-robin ``repartition`` spreads the blobs over every
+core, and the frame of blobs is cached. Every batch then runs ONE Spark job
+over one fixed plan::
 
-    df.select(used_cols).mapInArrow(count_partition, "q int, n long")
+    chunks.mapInArrow(count_partition, "q int, n long")
 
-The batch travels as data, a broadcast of typed per-query predicate lists,
-so no literal reaches the plan text and a fresh batch pays no SQL analysis
-or codegen. Each partition reads its Arrow batches lazily and counts them in
-chunks of at least ``CHUNK_ROWS`` rows: while Python counts one chunk, the
-JVM keeps converting the next one to Arrow, and the worker holds one chunk
-at a time. A chunk becomes one numpy view per column, and every query is
+so no batch re-converts a row, and a table whose rows sit in one partition
+is still counted on every core. The batch travels as data, a broadcast of
+typed per-query predicate lists, so no literal reaches the plan text and a
+fresh batch pays no SQL analysis or codegen. A task reads each of its blobs
+zero-copy and counts the chunk as one numpy view per column. Every query is
 counted by *index narrowing*: the first predicate runs over the whole
 chunk, each later one only over the row indices that survived, and the
 query stops once none survive. A conjunction's predicates run in order of
@@ -29,6 +33,11 @@ their selectivity on a fixed-stride sample of the chunk; the order changes
 the work, never a count. Chunks share no row, so each query's per-chunk
 counts (a disjunction's: the size of its per-chunk union) add up to the
 partition's count vector, and the driver sums the partitions' vectors.
+
+An estimator counts its table as of its first batch: the cached blobs are
+a snapshot, so a later change to the table's files is not seen, and a
+non-cached parquet frame is read once, not once per batch. The blobs are
+unpersisted when the estimator is garbage-collected.
 
 The counts equal Spark's own filter over ``predicates.spark_where`` on a
 frame whose scan prunes nothing (a parquet or cached scan prunes row groups
@@ -47,12 +56,15 @@ matches; these counts do not):
   a tz-aware literal is converted to UTC.
 
 A literal/column pair it cannot compare exactly raises ``TypeError`` before
-any job runs.
+any job runs. The blobs hold only the columns it can compare, so an array,
+map or binary column that no query names costs nothing.
 """
 
 from __future__ import annotations
 
 import math
+import threading
+import weakref
 from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 from fractions import Fraction
@@ -66,7 +78,9 @@ from naru_spark.meta import TableMeta
 from naru_spark.predicates import NUMPY_OPS, DisjunctiveQuery, Query, _bq
 
 SAMPLE_ROWS = 4096  # size of the fixed-stride sample that orders predicates
-CHUNK_ROWS = 1 << 17  # rows a partition gathers before it counts them
+CHUNK_ROWS = 1 << 17  # rows a partition gathers into one chunk
+# ... or bytes: a blob stays far below Spark's 2 GiB limit on a binary value
+CHUNK_BYTES = 64 << 20
 _EPOCH = datetime(1970, 1, 1)
 _US = timedelta(microseconds=1)
 _DAY_US = 86_400_000_000
@@ -170,28 +184,64 @@ def _compile(schema: T.StructType, queries: list) -> tuple[list, list, list]:
     return list(used), kinds, plans
 
 
-def exact_counts(df: DataFrame, queries: list) -> list[int]:
-    """Exact COUNT(*) of every (conjunctive or disjunctive) query in one
-    Spark job: one fixed ``mapInArrow`` plan over the used columns, the
-    batch shipped as a broadcast, one count vector per partition summed on
-    the driver."""
-    if not queries:
-        return []
-    used, kinds, plans = _compile(df.schema, queries)
-    sel = df.select(*([F.col(_bq(c)) for c in used] or [F.lit(0)]))
-    bc = df.sparkSession.sparkContext.broadcast((kinds, plans))
-
-    def count_partition(batches):
-        yield from _partition_counts(batches, *bc.value)
-
+def _comparable(dtype) -> bool:
     try:
-        rows = sel.mapInArrow(count_partition, "q int, n long").collect()
-    finally:
-        bc.destroy()
-    out = np.zeros(len(queries), dtype=np.int64)
-    for r in rows:
-        out[r.q] += r.n
-    return out.tolist()
+        _column_kind(dtype)
+    except TypeError:
+        return False
+    return True
+
+
+def _unpersist(frame: DataFrame) -> None:
+    if frame.sparkSession.sparkContext._jsc is not None:  # not after stop()
+        frame.unpersist()
+
+
+class ExactCounts:
+    """Exact COUNT(*) of every (conjunctive or disjunctive) query of a
+    batch in one Spark job over ``df``'s cached frame of chunk blobs, built
+    at the first batch (see the module docstring); the batch ships as a
+    broadcast, and the driver sums one count vector per partition."""
+
+    def __init__(self, df: DataFrame):
+        self.df = df
+        self._chunks: DataFrame | None = None
+        self._lock = threading.Lock()
+
+    def chunks(self) -> DataFrame:
+        """The cached ``(rows, ipc)`` frame: one Arrow IPC blob per chunk,
+        spread round-robin over at least ``defaultParallelism`` partitions."""
+        with self._lock:
+            if self._chunks is None:
+                df = self.df
+                cols = [F.col(_bq(f.name)) for f in df.schema.fields if _comparable(f.dataType)]
+                parts = max(df.rdd.getNumPartitions(), df.sparkSession.sparkContext.defaultParallelism)
+                blobs = df.select(*(cols or [F.lit(0)])).mapInArrow(_blobs, "rows long, ipc binary")
+                # the literal makes the plan this holder's own: Spark caches
+                # equal plans once, and the first holder released would drop
+                # the blobs of another holder over the same table
+                self._chunks = blobs.repartition(parts).withColumn("holder", F.lit(id(self))).cache()
+                weakref.finalize(self, _unpersist, self._chunks).atexit = False
+            return self._chunks
+
+    def __call__(self, queries: list) -> list[int]:
+        if not queries:
+            return []
+        used, kinds, plans = _compile(self.df.schema, queries)
+        chunks = self.chunks()
+        bc = chunks.sparkSession.sparkContext.broadcast((used, kinds, plans))
+
+        def count_partition(batches):
+            yield from _blob_counts(batches, *bc.value)
+
+        try:
+            rows = chunks.mapInArrow(count_partition, "q int, n long").collect()
+        finally:
+            bc.destroy()
+        out = np.zeros(len(queries), dtype=np.int64)
+        for r in rows:
+            out[r.q] += r.n
+        return out.tolist()
 
 
 # ---------------------------------------------------------- partition side
@@ -266,16 +316,33 @@ class _Column:
 
 def _chunks(batches):
     """The partition's Arrow batches, read lazily, as lists of batches
-    holding at least ``CHUNK_ROWS`` rows (the last one may hold fewer)."""
-    chunk, n = [], 0
+    holding at least ``CHUNK_ROWS`` rows or ``CHUNK_BYTES`` bytes (the last
+    one may hold fewer)."""
+    chunk, n, size = [], 0, 0
     for b in batches:
         chunk.append(b)
         n += b.num_rows
-        if n >= CHUNK_ROWS:
+        size += b.nbytes
+        if n >= CHUNK_ROWS or size >= CHUNK_BYTES:
             yield chunk, n
-            chunk, n = [], 0
+            chunk, n, size = [], 0, 0
     if n:
         yield chunk, n
+
+
+def _blobs(batches):
+    """One ``(rows, ipc)`` record per chunk of the partition: its row
+    count and its rows as one Arrow IPC stream of one record batch."""
+    import pyarrow as pa
+
+    for chunk, n in _chunks(batches):
+        table = pa.Table.from_batches(chunk).combine_chunks()
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, table.schema) as writer:
+            writer.write_table(table)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([n], pa.int64()), pa.array([sink.getvalue().to_pybytes()], pa.binary())], names=["rows", "ipc"]
+        )
 
 
 def _count_chunk(batches: list, n: int, kinds: list, plans: list, counts: np.ndarray) -> None:
@@ -310,17 +377,18 @@ def _count_chunk(batches: list, n: int, kinds: list, plans: list, counts: np.nda
             counts[qi] += np.count_nonzero(seen)
 
 
-def _partition_counts(batches, kinds: list, plans: list):
-    """One partition's count vector ``(q, n)`` over the compiled batch,
-    counted chunk by chunk as its Arrow batches arrive, so the JVM keeps
-    handing over the next chunk while this one is counted. Chunks share no
-    row, so their counts add up."""
+def _blob_counts(batches, used: list, kinds: list, plans: list):
+    """One partition's count vector ``(q, n)`` over the compiled batch: each
+    chunk blob is read zero-copy, narrowed to the used columns and counted.
+    Chunks share no row, so their counts add up."""
     import pyarrow as pa
 
     counts, rows = np.zeros(len(plans), dtype=np.int64), 0
-    for chunk, n in _chunks(batches):
-        _count_chunk(chunk, n, kinds, plans, counts)
-        rows += n
+    for b in batches:
+        for n, blob in zip(b.column("rows").to_pylist(), b.column("ipc")):
+            chunk = pa.ipc.open_stream(blob.as_buffer()).read_all().select(used)
+            _count_chunk(chunk.to_batches(), n, kinds, plans, counts)
+            rows += n
     if rows:
         yield pa.RecordBatch.from_arrays(
             [pa.array(np.arange(len(plans), dtype=np.int32)), pa.array(counts)], names=["q", "n"]
@@ -331,7 +399,7 @@ class Oracle(CardEst):
     """Exact count (estimators.py:505-536)."""
 
     name = "oracle"
-    # query_batch is ONE amortized scan (exact_counts) — its ms/q is not a
+    # query_batch is ONE amortized scan (ExactCounts) — its ms/q is not a
     # per-query latency (reports carry this flag)
     batch_scan = True
 
@@ -345,12 +413,13 @@ class Oracle(CardEst):
             else:
                 df = df.limit(limit_first_n)
         self.df = df
+        self.counts = ExactCounts(df)
 
     def query(self, q: Query) -> int:
         return self.query_batch([q])[0]
 
     def query_batch(self, queries: list[Query]) -> list[int]:
-        return exact_counts(self.df, queries)
+        return self.counts(queries)
 
 
 class Heuristic(CardEst):
@@ -358,7 +427,7 @@ class Heuristic(CardEst):
 
     Per-column selectivity = exact matching count / cardinality, every
     distinct single-column predicate of all queries counted in one
-    ``exact_counts`` scan; product on the driver. Multiplication order is the
+    ``ExactCounts`` scan; product on the driver. Multiplication order is the
     query's column order, so results are bit-deterministic.
     """
 
@@ -368,6 +437,7 @@ class Heuristic(CardEst):
     def __init__(self, df: DataFrame, meta: TableMeta):
         super().__init__()
         self.df = df
+        self.counts = ExactCounts(df)
         self.cardinality = meta.cardinality
 
     def query(self, q: Query) -> float:
@@ -377,7 +447,7 @@ class Heuristic(CardEst):
         # DisjunctiveQuery support: inclusion-exclusion expansion
         # (predicates.ie_terms) — every term is conjunctive, so the
         # per-column singles of ALL terms of ALL queries still ride ONE
-        # exact_counts scan; a conjunctive query expands to
+        # ExactCounts scan; a conjunctive query expands to
         # itself with coefficient 1. Same-column '='/'in' constraints
         # inside a merged term INTERSECT first (normalize_conjunct):
         # contradictory equalities from OR branches sharing a column
@@ -415,7 +485,7 @@ class Heuristic(CardEst):
                         k_u = uniq_idx[key] = len(uniq_singles)
                         uniq_singles.append(Query(t.table, [c], [op], [v]))
                     occ_idx.append(k_u)
-        uniq_counts = exact_counts(self.df, uniq_singles)
+        uniq_counts = self.counts(uniq_singles)
         counts = [uniq_counts[i] for i in occ_idx]
         out, k = [], 0
         for qterms in terms:
@@ -435,9 +505,10 @@ class Heuristic(CardEst):
 class Sampling(CardEst):
     """Uniform-sample estimator (estimators.py:584-616).
 
-    The sample is materialized once (``.cache()``) — the reference's
-    ``table.data.sample(n)`` analog; estimates divide by the *actual*
-    sample size as the reference does (estimators.py:592-607).
+    The sample is materialized once, as the cached chunk frame of its
+    ``ExactCounts`` — the reference's ``table.data.sample(n)`` analog;
+    estimates divide by the *actual* sample size, the sum of the frame's
+    ``rows``, as the reference does (estimators.py:592-607).
     """
 
     name = "sampling"
@@ -446,15 +517,16 @@ class Sampling(CardEst):
     def __init__(self, df: DataFrame, meta: TableMeta, p: float = 0.0013, seed: int = 42):
         super().__init__()
         self.cardinality = meta.cardinality
-        self.sample_df = df.sample(fraction=min(1.0, p), seed=seed).cache()
-        self.num_samples = self.sample_df.count()
+        self.sample_df = df.sample(fraction=min(1.0, p), seed=seed)
+        self.counts = ExactCounts(self.sample_df)
+        self.num_samples = self.counts.chunks().agg(F.sum("rows")).first()[0] or 0
         self.name = f"sampling_{self.num_samples}"
 
     def query(self, q: Query) -> float:
         return self.query_batch([q])[0]
 
     def query_batch(self, queries: list[Query]) -> list[float]:
-        return [self._scale(m) for m in exact_counts(self.sample_df, queries)]
+        return [self._scale(m) for m in self.counts(queries)]
 
     def _scale(self, matched: int) -> float:
         if self.num_samples == 0:

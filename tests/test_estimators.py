@@ -588,7 +588,7 @@ def test_oracle_query_counts_nan_on_parquet_and_cached_frames(spark, tmp_path):
             assert sampling.query(q) == truth
     finally:
         duck.close()
-        sampling.sample_df.unpersist()
+        del sampling  # unpersists its cached sample
         cached.unpersist()
 
 
@@ -685,10 +685,12 @@ def _numpy_count(cols: dict, q) -> int:
 
 
 def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
-    """Spark-free: a partition read in chunks counts exactly what one
-    whole-partition chunk and a plain numpy count do, and it reads its
-    batches lazily, so no evaluated chunk holds more than ``CHUNK_ROWS``
-    rows plus one input batch."""
+    """Spark-free: a partition's batches built into chunk blobs and counted
+    blob by blob count exactly what one whole-partition chunk and a plain
+    numpy count do. The builder reads its batches lazily, so no chunk holds
+    more than ``CHUNK_ROWS`` rows plus one input batch, and a small
+    ``CHUNK_BYTES`` splits the chunks by bytes without changing a count."""
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     from naru_spark.estimators import exact
@@ -707,27 +709,32 @@ def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
     used, kinds, plans = exact._compile(schema, queries)
     assert used == ["i", "d", "s"]
 
-    pulled = [0]
-    evaluated = []
+    def build() -> tuple[list, list]:
+        """The blobs of the partition and their row counts, checking that
+        the builder reads no batch ahead of the chunk it yields."""
+        pulled, blobs, rows = [0], [], []
 
-    def feed():
-        for b in batches:
-            pulled[0] += b.num_rows
-            yield b
+        def feed():
+            for b in batches:
+                pulled[0] += b.num_rows
+                yield b
 
-    count_chunk = exact._count_chunk
+        for blob in exact._blobs(feed()):
+            (r,) = blob.column("rows").to_pylist()
+            assert pulled[0] == sum(rows) + r  # nothing read ahead
+            blobs.append(blob)
+            rows.append(r)
+        return blobs, rows
 
-    def recording(chunk, rows, *args):
-        assert pulled[0] == sum(evaluated) + rows  # nothing read ahead
-        assert rows <= exact.CHUNK_ROWS + max(sizes)
-        evaluated.append(rows)
-        count_chunk(chunk, rows, *args)
+    def counted(blobs) -> list:
+        (out,) = list(exact._blob_counts(iter(blobs), used, kinds, plans))
+        assert out.column(0).to_pylist() == list(range(len(queries)))
+        return out.column(1).to_pylist()
 
-    monkeypatch.setattr(exact, "_count_chunk", recording)
-    (out,) = list(exact._partition_counts(feed(), kinds, plans))
-    chunked = out.column(1).to_pylist()
-    assert out.column(0).to_pylist() == list(range(len(queries)))
+    blobs, evaluated = build()
+    chunked = counted(blobs)
     assert len(evaluated) == 3 and sum(evaluated) == n
+    assert all(rows <= exact.CHUNK_ROWS + max(sizes) for rows in evaluated)
 
     # NaN and NULL sit on both sides of every chunk boundary
     d, d_ok = cols["d"]
@@ -739,10 +746,21 @@ def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
     assert not set(s[: evaluated[0]]) & set(s[-evaluated[-1]:])
 
     whole = np.zeros(len(queries), dtype=np.int64)
-    count_chunk(batches, n, kinds, plans, whole)
+    exact._count_chunk(batches, n, kinds, plans, whole)
     assert chunked == whole.tolist() == [_numpy_count(cols, q) for q in queries]
     assert all(0 < c < n for c in chunked[:10])  # the queries are selective
-    assert list(exact._partition_counts(iter([]), kinds, plans)) == []
+    assert list(exact._blobs(iter([]))) == []
+    assert list(exact._blob_counts(iter([]), used, kinds, plans)) == []
+
+    # a byte cap of an eighth of the partition splits it into more chunks
+    cap = sum(b.nbytes for b in batches) // 8
+    monkeypatch.setattr(exact, "CHUNK_BYTES", cap)
+    blobs, by_bytes = build()
+    assert len(by_bytes) > len(evaluated) and sum(by_bytes) == n
+    for blob in blobs:
+        table = pa.ipc.open_stream(blob.column("ipc")[0].as_buffer()).read_all()
+        assert table.nbytes <= cap + max(b.nbytes for b in batches)
+    assert counted(blobs) == chunked
 
 
 def test_oracle_counts_one_partition_larger_than_a_chunk(spark):
@@ -781,4 +799,49 @@ def test_oracle_counts_one_partition_larger_than_a_chunk(spark):
         DisjunctiveQuery("t", [conj[1], conj[2], Query("t", ["s"], ["="], ["v015"])]),
     ]
     truths = [df.filter(spark_where(q)).count() for q in batch]
-    assert all(truths) and Oracle(df).query_batch(batch) == truths
+    oracle = Oracle(df)
+    assert all(truths) and oracle.query_batch(batch) == truths
+    # the chunks of the one source partition are spread over the cores
+    assert oracle.counts.chunks().select(F.spark_partition_id()).distinct().count() >= 2
+    assert oracle.query_batch(batch) == truths
+
+
+def test_estimators_release_their_chunk_frames(spark):
+    """Oracle, Heuristic and Sampling each cache one chunk frame, their own
+    even over the same table, and unpersist it when they are deleted."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    df = spark.range(1000).select((F.col("id") % 97).alias("i"))
+    before = persisted().size()
+    meta = SimpleNamespace(cardinality=1000)
+    q = Query("t", ["i"], ["<"], [10])
+    oracle, heuristic, sampling = Oracle(df), Heuristic(df, meta), Sampling(df, meta, p=0.5)
+    assert oracle.query(q) == df.filter("i < 10").count()
+    assert 0 <= heuristic.query(q) <= 1000 and 0 <= sampling.query(q) <= 1000
+    assert persisted().size() == before + 3
+    del oracle, heuristic, sampling
+    assert persisted().size() == before
+
+
+def test_oracle_leaves_out_columns_it_cannot_compare(spark):
+    """Array, map and binary columns stay out of the chunk blobs: a query on
+    another column counts, and one on them raises ``TypeError`` before any
+    job runs."""
+    from pyspark.sql import functions as F
+
+    from naru_spark.predicates import spark_where
+
+    idc = F.col("id")
+    df = spark.range(100).select(
+        idc.alias("i"), F.array(idc).alias("arr"), F.create_map(idc, idc).alias("m"), F.bin(idc).cast("binary").alias("b")
+    )
+    oracle = Oracle(df)
+    for c in ("arr", "m", "b"):
+        with pytest.raises(TypeError):
+            oracle.query_batch([Query("t", [c], ["="], [1])])
+    assert oracle.counts._chunks is None  # nothing was built
+    q = Query("t", ["i"], [">="], [60])
+    assert oracle.query_batch([q]) == [df.filter(spark_where(q)).count()] == [40]
