@@ -51,13 +51,17 @@ def __getattr__(name: str):
 
 
 def _reread_changed_zips_only() -> None:
-    """Backport of Python 3.12's lazy ``zipimporter.invalidate_caches``
-    (gh-103200). pyspark's worker calls ``importlib.invalidate_caches()``
-    at the start of every task, and on 3.11 every ``zipimporter`` then
-    re-reads its archive's whole directory: pyspark.zip alone has about a
-    dozen importers, and the re-reads cost 130-260 ms per task. An importer
-    now re-reads only when its archive's ``(st_mtime_ns, st_size,
-    st_ino)`` changed since it last did, so a rewritten zip is still seen."""
+    """Skip ``zipimporter.invalidate_caches`` for archives whose stat did
+    not change, inspired by Python 3.12's lazy invalidation (gh-103200).
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and on 3.11 every ``zipimporter`` then re-reads its
+    archive's whole directory: pyspark.zip alone has about a dozen
+    importers, and the re-reads cost 130-260 ms per task. An importer now
+    re-reads only when its archive's ``(st_mtime_ns, st_size, st_ino)``
+    changed since it last did, so a rewritten zip is still seen. Unlike
+    3.12, which drops the cached directory and re-reads it at the next
+    lookup, this misses an in-place rewrite that keeps the size and the
+    inode within one mtime tick."""
     import os
     import zipimport
 

@@ -11,21 +11,23 @@ Reference (/root/reference/estimators.py):
 - ``Const``         (567-581): constant baseline.
 
 Scale design: every count, a single query's too, comes from one
-``ExactCounts`` holder per estimator. Its first batch converts the table to
-Arrow once: a ``mapInArrow`` pass over the columns the evaluator can compare
-gathers each partition's Arrow batches into chunks of at least
-``CHUNK_ROWS`` rows (or ``CHUNK_BYTES`` bytes) and writes each chunk as one
-Arrow IPC blob; a round-robin ``repartition`` spreads the blobs over every
-core, and the frame of blobs is cached. Every batch then runs ONE Spark job
-over one fixed plan::
+``ExactCounts`` holder per estimator, and every batch runs ONE Spark job::
 
-    chunks.mapInArrow(count_partition, "q int, n long")
+    frame.mapInArrow(count_partition, "q int, n long")
 
-so no batch re-converts a row, and a table whose rows sit in one partition
+which counts each partition chunk by chunk, a chunk being the Arrow batches
+of at least ``CHUNK_ROWS`` rows (or ``CHUNK_BYTES`` bytes). At the first
+batch ``frame`` is the table narrowed to the batch's columns: most
+estimators count one batch, and this pruned scan is all they pay. The second
+batch converts the table to Arrow once: a ``mapInArrow`` pass over the
+columns the evaluator can compare writes each chunk as one Arrow IPC blob, a
+round-robin ``repartition`` spreads the blobs over every core, and this
+frame of blobs is cached and counted by every later batch. So a reused
+estimator re-converts no row, and a table whose rows sit in one partition
 is still counted on every core. The batch travels as data, a broadcast of
 typed per-query predicate lists, so no literal reaches the plan text and a
 fresh batch pays no SQL analysis or codegen. A task reads each of its blobs
-zero-copy and counts the chunk as one numpy view per column. Every query is
+zero-copy and counts a chunk as one numpy view per column. Every query is
 counted by *index narrowing*: the first predicate runs over the whole
 chunk, each later one only over the row indices that survived, and the
 query stops once none survive. A conjunction's predicates run in order of
@@ -34,10 +36,11 @@ the work, never a count. Chunks share no row, so each query's per-chunk
 counts (a disjunction's: the size of its per-chunk union) add up to the
 partition's count vector, and the driver sums the partitions' vectors.
 
-An estimator counts its table as of its first batch: the cached blobs are
-a snapshot, so a later change to the table's files is not seen, and a
-non-cached parquet frame is read once, not once per batch. The blobs are
-unpersisted when the estimator is garbage-collected.
+From its second batch on, an estimator counts its table as of that batch:
+the cached blobs are a snapshot, so a later change to the table's files is
+not seen, and a non-cached parquet frame is not re-read per batch.
+``Sampling`` builds its frame when it is made, so its sample stays fixed.
+The blobs are unpersisted when the estimator is garbage-collected.
 
 The counts equal Spark's own filter over ``predicates.spark_where`` on a
 frame whose scan prunes nothing (a parquet or cached scan prunes row groups
@@ -199,13 +202,15 @@ def _unpersist(frame: DataFrame) -> None:
 
 class ExactCounts:
     """Exact COUNT(*) of every (conjunctive or disjunctive) query of a
-    batch in one Spark job over ``df``'s cached frame of chunk blobs, built
-    at the first batch (see the module docstring); the batch ships as a
-    broadcast, and the driver sums one count vector per partition."""
+    batch in one Spark job: the first batch over ``df``'s used columns,
+    every later one over ``df``'s cached frame of chunk blobs (see the
+    module docstring); the batch ships as a broadcast, and the driver sums
+    one count vector per partition."""
 
     def __init__(self, df: DataFrame):
         self.df = df
         self._chunks: DataFrame | None = None
+        self._batches = 0
         self._lock = threading.Lock()
 
     def chunks(self) -> DataFrame:
@@ -228,14 +233,24 @@ class ExactCounts:
         if not queries:
             return []
         used, kinds, plans = _compile(self.df.schema, queries)
-        chunks = self.chunks()
-        bc = chunks.sparkSession.sparkContext.broadcast((used, kinds, plans))
+        with self._lock:
+            self._batches += 1
+            cached = self._chunks is not None or self._batches > 1
+        # the first batch scans only its own columns: most estimators count
+        # one batch, and the chunk frame would cost them a wider conversion,
+        # a shuffle and a cached copy; the second batch builds the frame
+        if cached:
+            frame = self.chunks()
+        else:
+            frame = self.df.select(*([F.col(_bq(c)) for c in used] or [F.lit(0)]))
+        bc = frame.sparkSession.sparkContext.broadcast((used, kinds, plans))
 
         def count_partition(batches):
-            yield from _blob_counts(batches, *bc.value)
+            used, kinds, plans = bc.value
+            yield from _partition_counts(_read_blobs(batches, used) if cached else _chunks(batches), kinds, plans)
 
         try:
-            rows = chunks.mapInArrow(count_partition, "q int, n long").collect()
+            rows = frame.mapInArrow(count_partition, "q int, n long").collect()
         finally:
             bc.destroy()
         out = np.zeros(len(queries), dtype=np.int64)
@@ -377,18 +392,26 @@ def _count_chunk(batches: list, n: int, kinds: list, plans: list, counts: np.nda
             counts[qi] += np.count_nonzero(seen)
 
 
-def _blob_counts(batches, used: list, kinds: list, plans: list):
-    """One partition's count vector ``(q, n)`` over the compiled batch: each
-    chunk blob is read zero-copy, narrowed to the used columns and counted.
-    Chunks share no row, so their counts add up."""
+def _read_blobs(batches, used: list):
+    """The chunks ``(batches, rows)`` of a partition of the chunk frame:
+    each blob read zero-copy and narrowed to the used columns."""
+    import pyarrow as pa
+
+    for b in batches:
+        for n, blob in zip(b.column("rows").to_pylist(), b.column("ipc")):
+            yield pa.ipc.open_stream(blob.as_buffer()).read_all().select(used).to_batches(), n
+
+
+def _partition_counts(chunks, kinds: list, plans: list):
+    """One partition's count vector ``(q, n)`` over the compiled batch,
+    counted chunk by chunk as ``chunks`` yields them. Chunks share no row,
+    so their counts add up."""
     import pyarrow as pa
 
     counts, rows = np.zeros(len(plans), dtype=np.int64), 0
-    for b in batches:
-        for n, blob in zip(b.column("rows").to_pylist(), b.column("ipc")):
-            chunk = pa.ipc.open_stream(blob.as_buffer()).read_all().select(used)
-            _count_chunk(chunk.to_batches(), n, kinds, plans, counts)
-            rows += n
+    for chunk, n in chunks:
+        _count_chunk(chunk, n, kinds, plans, counts)
+        rows += n
     if rows:
         yield pa.RecordBatch.from_arrays(
             [pa.array(np.arange(len(plans), dtype=np.int32)), pa.array(counts)], names=["q", "n"]

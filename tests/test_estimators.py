@@ -685,11 +685,12 @@ def _numpy_count(cols: dict, q) -> int:
 
 
 def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
-    """Spark-free: a partition's batches built into chunk blobs and counted
-    blob by blob count exactly what one whole-partition chunk and a plain
-    numpy count do. The builder reads its batches lazily, so no chunk holds
-    more than ``CHUNK_ROWS`` rows plus one input batch, and a small
-    ``CHUNK_BYTES`` splits the chunks by bytes without changing a count."""
+    """Spark-free: a partition's batches counted chunk by chunk as they
+    arrive, and built into chunk blobs and counted blob by blob, count
+    exactly what one whole-partition chunk and a plain numpy count do. The
+    builder reads its batches lazily, so no chunk holds more than
+    ``CHUNK_ROWS`` rows plus one input batch, and a small ``CHUNK_BYTES``
+    splits the chunks by bytes without changing a count."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -726,13 +727,14 @@ def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
             rows.append(r)
         return blobs, rows
 
-    def counted(blobs) -> list:
-        (out,) = list(exact._blob_counts(iter(blobs), used, kinds, plans))
+    def counted(chunks) -> list:
+        (out,) = list(exact._partition_counts(chunks, kinds, plans))
         assert out.column(0).to_pylist() == list(range(len(queries)))
         return out.column(1).to_pylist()
 
     blobs, evaluated = build()
-    chunked = counted(blobs)
+    chunked = counted(exact._read_blobs(iter(blobs), used))
+    assert counted(exact._chunks(iter(batches))) == chunked
     assert len(evaluated) == 3 and sum(evaluated) == n
     assert all(rows <= exact.CHUNK_ROWS + max(sizes) for rows in evaluated)
 
@@ -750,7 +752,8 @@ def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
     assert chunked == whole.tolist() == [_numpy_count(cols, q) for q in queries]
     assert all(0 < c < n for c in chunked[:10])  # the queries are selective
     assert list(exact._blobs(iter([]))) == []
-    assert list(exact._blob_counts(iter([]), used, kinds, plans)) == []
+    assert list(exact._partition_counts(exact._read_blobs(iter([]), used), kinds, plans)) == []
+    assert list(exact._partition_counts(exact._chunks(iter([])), kinds, plans)) == []
 
     # a byte cap of an eighth of the partition splits it into more chunks
     cap = sum(b.nbytes for b in batches) // 8
@@ -760,7 +763,8 @@ def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
     for blob in blobs:
         table = pa.ipc.open_stream(blob.column("ipc")[0].as_buffer()).read_all()
         assert table.nbytes <= cap + max(b.nbytes for b in batches)
-    assert counted(blobs) == chunked
+    assert counted(exact._read_blobs(iter(blobs), used)) == chunked
+    assert counted(exact._chunks(iter(batches))) == chunked
 
 
 def test_oracle_counts_one_partition_larger_than_a_chunk(spark):
@@ -807,8 +811,10 @@ def test_oracle_counts_one_partition_larger_than_a_chunk(spark):
 
 
 def test_estimators_release_their_chunk_frames(spark):
-    """Oracle, Heuristic and Sampling each cache one chunk frame, their own
-    even over the same table, and unpersist it when they are deleted."""
+    """Oracle and Heuristic cache nothing for one batch. From their second
+    batch on they each cache one chunk frame, as Sampling does when it is
+    made, their own even over the same table, and unpersist it when they
+    are deleted."""
     from types import SimpleNamespace
 
     from pyspark.sql import functions as F
@@ -819,9 +825,11 @@ def test_estimators_release_their_chunk_frames(spark):
     meta = SimpleNamespace(cardinality=1000)
     q = Query("t", ["i"], ["<"], [10])
     oracle, heuristic, sampling = Oracle(df), Heuristic(df, meta), Sampling(df, meta, p=0.5)
-    assert oracle.query(q) == df.filter("i < 10").count()
-    assert 0 <= heuristic.query(q) <= 1000 and 0 <= sampling.query(q) <= 1000
-    assert persisted().size() == before + 3
+    assert persisted().size() == before + 1
+    for cached in (1, 3):
+        assert oracle.query(q) == df.filter("i < 10").count()
+        assert 0 <= heuristic.query(q) <= 1000 and 0 <= sampling.query(q) <= 1000
+        assert persisted().size() == before + cached
     del oracle, heuristic, sampling
     assert persisted().size() == before
 
@@ -830,6 +838,7 @@ def test_oracle_leaves_out_columns_it_cannot_compare(spark):
     """Array, map and binary columns stay out of the chunk blobs: a query on
     another column counts, and one on them raises ``TypeError`` before any
     job runs."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from naru_spark.predicates import spark_where
@@ -844,4 +853,7 @@ def test_oracle_leaves_out_columns_it_cannot_compare(spark):
             oracle.query_batch([Query("t", [c], ["="], [1])])
     assert oracle.counts._chunks is None  # nothing was built
     q = Query("t", ["i"], [">="], [60])
-    assert oracle.query_batch([q]) == [df.filter(spark_where(q)).count()] == [40]
+    for _ in range(2):  # the second batch counts the chunk frame
+        assert oracle.query_batch([q]) == [df.filter(spark_where(q)).count()] == [40]
+    blob = oracle.counts._chunks.first().ipc
+    assert pa.ipc.open_stream(blob).schema.names == ["i"]
