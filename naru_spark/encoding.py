@@ -10,9 +10,10 @@ Reference semantics (/root/reference):
   always False in a domain mask.
 
 Because the dictionary is sorted, each ``=``/``<``/``<=``/``>``/``>=``
-predicate selects one contiguous run of bins. ``ColumnDictionary.bin_range``
-is the one "predicate -> bin range" translation: one ``searchsorted`` per
-predicate, never a scan of the dictionary. The reference evaluates
+predicate selects one contiguous run of bins. ``sorted_range`` is the one
+"predicate -> sorted range" translation, shared by ``ColumnDictionary.bin_range``
+(model masks) and the exact counter's code ranges: one ``searchsorted`` per
+predicate (two for ``=``), never a scan of the values. The reference evaluates
 ``op(all_distinct_values, v)`` elementwise instead (``estimators.py:226-230``);
 every mask built from a range equals that evaluation bit for bit.
 
@@ -50,9 +51,20 @@ from naru_spark.meta import ColumnMeta, TableMeta
 
 # Domains larger than this stay distributed (DataFrame-backed dictionary).
 DEFAULT_MAX_COLLECT_DOMAIN = 4_000_000
-# searchsorted side whose index ends (<, <=) or starts (>, >=, =) the
-# bin range of ``col <op> val``
-_SEARCH_SIDE = {"=": "left", "<": "left", ">=": "left", "<=": "right", ">": "right"}
+# searchsorted side whose index ends (<, <=) or starts (>, >=) the range
+# of ``col <op> val``
+_SEARCH_SIDE = {"<": "left", ">=": "left", "<=": "right", ">": "right"}
+
+
+def sorted_range(values: np.ndarray, op: str, val) -> tuple[int, int]:
+    """Indices ``[lo, hi)`` of the sorted ``values`` satisfying ``x <op> val``
+    for op in ``= < <= > >=``, in numpy's sort order: a NaN literal equals
+    NaN and sorts above every other value, as in Spark. The literal must be
+    comparable with ``values`` (``bin_range`` checks that)."""
+    if op == "=":
+        return int(values.searchsorted(val, "left")), int(values.searchsorted(val, "right"))
+    i = int(values.searchsorted(val, _SEARCH_SIDE[op]))
+    return (0, i) if op[0] == "<" else (i, len(values))
 
 
 @dataclass
@@ -131,7 +143,7 @@ class ColumnDictionary:
 
     def bin_range(self, op: str, val) -> tuple[int, int]:
         """Bins ``[lo, hi)`` satisfying ``col <op> val`` for op in
-        ``= < <= > >=``: one ``searchsorted`` into the sorted dictionary.
+        ``= < <= > >=``: ``sorted_range`` over the sorted dictionary.
 
         Equals the elementwise evaluation of the op against every value
         (``estimators.py:219-236``), literal edge cases included:
@@ -147,7 +159,6 @@ class ColumnDictionary:
 
         The NULL bin is never in the range (``common.py:11-24``).
         """
-        side = _SEARCH_SIDE[op]
         v = self.values
         shift = int(self.has_null)
         try:
@@ -162,13 +173,7 @@ class ColumnDictionary:
             # exact, at the literal's own unit; searchsorted would otherwise
             # compare by casting the whole dictionary to objects
             val = pd.Timestamp(val).to_datetime64()
-        i = int(v.searchsorted(val, side))
-        if op == "=":
-            lo, hi = i, i + int(i < len(v) and v[i] == val)
-        elif op[0] == "<":
-            lo, hi = 0, i
-        else:
-            lo, hi = i, len(v)
+        lo, hi = sorted_range(v, op, val)
         return lo + shift, hi + shift
 
     def in_bins(self, vals) -> np.ndarray:

@@ -15,26 +15,35 @@ Scale design: every count, a single query's too, comes from one
 
     frame.mapInArrow(count_partition, "q int, n long")
 
-which counts each partition chunk by chunk, a chunk being the Arrow batches
-of at least ``CHUNK_ROWS`` rows (or ``CHUNK_BYTES`` bytes). At the first
-batch ``frame`` is the table narrowed to the batch's columns: most
-estimators count one batch, and this pruned scan is all they pay. The second
-batch converts the table to Arrow once: a ``mapInArrow`` pass over the
-columns the evaluator can compare writes each chunk as one Arrow IPC blob, a
-round-robin ``repartition`` spreads the blobs over every core, and this
-frame of blobs is cached and counted by every later batch. So a reused
-estimator re-converts no row, and a table whose rows sit in one partition
-is still counted on every core. The batch travels as data, a broadcast of
+which counts each partition chunk by chunk. Every chunk column is *coded*:
+``codes`` index its sorted distinct values ``uniq`` (NULL gets the code
+``len(uniq)``, outside every range; NaN is one value, sorted last, as
+Spark orders it), ``cum`` counts the rows below each code, and ``perm``
+lists the rows in code order. A predicate is then one code range
+``[lo, hi)`` from one ``encoding.sorted_range`` (the translation the
+model masks use), an ``in`` the merged union of its ``=`` ranges. A
+branch with one predicate is counted from ``cum`` without reading a row;
+a conjunction starts from the ``perm`` slice of its predicate with the
+fewest rows, known exactly from ``cum``, and each later predicate narrows
+those rows with one unsigned range test on their narrow codes (``uint16``
+while the domain fits). A disjunction counts the union of its branches'
+rows. Chunks share no row, so their counts add up to the partition's
+count vector, and the driver sums the partitions' vectors.
+
+At the first batch ``frame`` is the table narrowed to the batch's columns,
+and each chunk of at least ``CHUNK_ROWS`` rows is coded as it arrives: most
+estimators count one batch, and this pruned scan is all they pay. The
+second batch builds the *chunk frame* once: the rows of every column the
+evaluator can compare are dealt round-robin over at least
+``defaultParallelism`` partitions, so the cores hold equal shares, and each
+partition codes its rows there, on every core, into as few chunks as
+``CHUNK_BYTES`` allows (each chunk costs every batch a fixed overhead).
+Each chunk is one Arrow IPC blob, a ``struct<code, perm>`` per column whose
+``code`` is dictionary-encoded over ``uniq``; the frame of blobs is cached
+and every later batch reads it zero-copy, so a reused estimator neither
+re-converts nor re-codes a row. The batch travels as data, a broadcast of
 typed per-query predicate lists, so no literal reaches the plan text and a
-fresh batch pays no SQL analysis or codegen. A task reads each of its blobs
-zero-copy and counts a chunk as one numpy view per column. Every query is
-counted by *index narrowing*: the first predicate runs over the whole
-chunk, each later one only over the row indices that survived, and the
-query stops once none survive. A conjunction's predicates run in order of
-their selectivity on a fixed-stride sample of the chunk; the order changes
-the work, never a count. Chunks share no row, so each query's per-chunk
-counts (a disjunction's: the size of its per-chunk union) add up to the
-partition's count vector, and the driver sums the partitions' vectors.
+fresh batch pays no SQL analysis or codegen.
 
 From its second batch on, an estimator counts its table as of that batch:
 the cached blobs are a snapshot, so a later change to the table's files is
@@ -53,8 +62,8 @@ matches; these counts do not):
   int, ``Decimal`` or decimal-form float literal (Spark parses ``2.5`` as a
   DECIMAL) compares exactly, one Spark parses as a DOUBLE (``1e-05``,
   ``inf``, NaN) compares against the column cast to double.
-* Strings are dictionary-coded per chunk in code-point order, which is
-  Spark's binary UTF-8 order.
+* Strings are coded per chunk in code-point order, which is Spark's binary
+  UTF-8 order.
 * Timestamps and dates are UTC microseconds; a ``date`` is its midnight and
   a tz-aware literal is converted to UTC.
 
@@ -78,17 +87,15 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from naru_spark.estimators.base import CardEst
 from naru_spark.meta import TableMeta
-from naru_spark.predicates import NUMPY_OPS, DisjunctiveQuery, Query, _bq
+from naru_spark.encoding import sorted_range
+from naru_spark.predicates import DisjunctiveQuery, Query, _bq
 
-SAMPLE_ROWS = 4096  # size of the fixed-stride sample that orders predicates
-CHUNK_ROWS = 1 << 17  # rows a partition gathers into one chunk
+CHUNK_ROWS = 1 << 17  # rows a first batch gathers into one chunk
 # ... or bytes: a blob stays far below Spark's 2 GiB limit on a binary value
 CHUNK_BYTES = 64 << 20
 _EPOCH = datetime(1970, 1, 1)
 _US = timedelta(microseconds=1)
 _DAY_US = 86_400_000_000
-# string ops on sorted distinct values: op -> (code op, searchsorted side)
-_CODE_OPS = {"<": ("<", "left"), "<=": ("<", "right"), ">": (">=", "right"), ">=": (">=", "left")}
 
 
 # ------------------------------------------------------------- driver side
@@ -214,18 +221,21 @@ class ExactCounts:
         self._lock = threading.Lock()
 
     def chunks(self) -> DataFrame:
-        """The cached ``(rows, ipc)`` frame: one Arrow IPC blob per chunk,
-        spread round-robin over at least ``defaultParallelism`` partitions."""
+        """The cached ``(rows, ipc)`` frame of coded chunk blobs: the rows
+        of the columns it can compare, dealt round-robin over at least
+        ``defaultParallelism`` partitions and coded there."""
         with self._lock:
             if self._chunks is None:
                 df = self.df
-                cols = [F.col(_bq(f.name)) for f in df.schema.fields if _comparable(f.dataType)]
+                fields = [f for f in df.schema.fields if _comparable(f.dataType)]
+                kinds = [_column_kind(f.dataType) for f in fields]
                 parts = max(df.rdd.getNumPartitions(), df.sparkSession.sparkContext.defaultParallelism)
-                blobs = df.select(*(cols or [F.lit(0)])).mapInArrow(_blobs, "rows long, ipc binary")
+                rows = df.select(*([F.col(_bq(f.name)) for f in fields] or [F.lit(0)])).repartition(parts)
+                blobs = rows.mapInArrow(lambda batches: _coded_blobs(batches, kinds), "rows long, ipc binary")
                 # the literal makes the plan this holder's own: Spark caches
                 # equal plans once, and the first holder released would drop
                 # the blobs of another holder over the same table
-                self._chunks = blobs.repartition(parts).withColumn("holder", F.lit(id(self))).cache()
+                self._chunks = blobs.withColumn("holder", F.lit(id(self))).cache()
                 weakref.finalize(self, _unpersist, self._chunks).atexit = False
             return self._chunks
 
@@ -247,7 +257,8 @@ class ExactCounts:
 
         def count_partition(batches):
             used, kinds, plans = bc.value
-            yield from _partition_counts(_read_blobs(batches, used) if cached else _chunks(batches), kinds, plans)
+            chunks = _read_coded(batches, used, kinds) if cached else _coded_rows(batches, kinds)
+            yield from _partition_counts(chunks, plans)
 
         try:
             rows = frame.mapInArrow(count_partition, "q int, n long").collect()
@@ -260,158 +271,207 @@ class ExactCounts:
 
 
 # ---------------------------------------------------------- partition side
-class _Column:
-    """One column of a chunk as numpy: ``x`` holds unscaled int64,
-    float64, UTC microseconds or, for strings, int32 codes into the sorted
-    distinct values ``uniq``; ``ok`` is the validity mask (None: no NULL)."""
+class _Coded:
+    """One column of a chunk coded into its sorted distinct values:
+    ``codes[i]`` indexes ``uniq`` (NULL is ``len(uniq)``, outside every
+    range), ``cum[k]`` counts the rows coded below ``k``, and ``perm``
+    lists the rows in code order."""
 
-    def __init__(self, arr, kind: str, scale: int):
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def __init__(self, codes: np.ndarray, uniq: np.ndarray, scale: int, perm: np.ndarray):
+        self.codes, self.uniq, self.scale, self.perm = codes, uniq, scale, perm
+        m = len(uniq)
+        self.cum = np.zeros(m + 1, dtype=np.int64)
+        np.cumsum(np.bincount(codes, minlength=m + 1)[:m], out=self.cum[1:])
 
-        self.ok = arr.is_valid().to_numpy(zero_copy_only=False) if arr.null_count else None
-        self.scale, self.uniq, self._dbl = scale, None, None
-        if kind == "str":
-            enc = arr.dictionary_encode()
-            order = pc.array_sort_indices(enc.dictionary).to_numpy()  # byte order
-            self.uniq = enc.dictionary.to_numpy(zero_copy_only=False)[order]
-            rank = np.empty(len(order), dtype=np.int32)
-            rank[order] = np.arange(len(order), dtype=np.int32)
-            idx = enc.indices.fill_null(0).to_numpy()
-            self.x = rank[idx] if len(rank) else np.zeros(len(arr), dtype=np.int32)
-        elif pa.types.is_decimal(arr.type):
-            # precision <= 15: the low word of each 128-bit value holds it
-            words = np.frombuffer(arr.buffers()[1], dtype="<i8")
-            self.x = words[2 * arr.offset : 2 * (arr.offset + len(arr)) : 2]
-        elif pa.types.is_date(arr.type):
-            self.x = arr.cast(pa.int32()).fill_null(0).to_numpy().astype(np.int64) * _DAY_US
-        elif pa.types.is_timestamp(arr.type):
-            self.x = arr.cast(pa.timestamp("us", arr.type.tz)).cast(pa.int64()).fill_null(0).to_numpy()
-        else:
-            to = pa.float64() if kind == "float" else pa.int64()
-            self.x = arr.cast(to).fill_null(0).to_numpy()
-        self.has_nan = kind == "float" and bool(np.isnan(self.x).any())
-
-    @property
-    def dbl(self) -> np.ndarray:
-        """The exact column cast to double, as Spark casts it."""
-        if self._dbl is None:
-            self._dbl = self.x.astype(np.float64) / 10.0**self.scale
-        return self._dbl
-
-    def localize(self, tests: tuple) -> tuple:
-        """String tests as comparisons of this chunk's codes."""
-        if self.uniq is None:
-            return tests
+    def ranges(self, tests: tuple) -> list:
+        """The OR of ``tests`` as sorted, disjoint code ranges ``[lo, hi)``;
+        a "dbl" test searches the exact values cast to double, as Spark
+        casts them (monotone, so still sorted)."""
         out = []
-        for _, op, v in tests:
-            if op == "=":
-                i = int(np.searchsorted(self.uniq, v))
-                out.append(("raw", "=", i if i < len(self.uniq) and self.uniq[i] == v else -1))
-            else:
-                code_op, side = _CODE_OPS[op]
-                out.append(("raw", code_op, int(np.searchsorted(self.uniq, v, side))))
-        return tuple(out)
+        for lo, hi in sorted(
+            sorted_range(self.uniq / 10.0**self.scale if view == "dbl" else self.uniq, op, v) for view, op, v in tests
+        ):
+            if out and lo <= out[-1][1]:
+                out[-1][1] = max(out[-1][1], hi)
+            elif lo < hi:
+                out.append([lo, hi])
+        return out
 
-    def match(self, tests: tuple, rows) -> np.ndarray:
-        """Which of ``rows`` (a slice or an index array) satisfy any test."""
-        m = None
-        for view, op, v in tests:
-            x = (self.dbl if view == "dbl" else self.x)[rows]
-            if v != v:  # NaN literal: equals NaN only, sorts above everything
-                nan = np.isnan(x)
-                t = nan if op in ("=", ">=") else (~nan if op == "<" else np.full(len(x), op == "<="))
-            else:
-                t = NUMPY_OPS[op](x, v)
-                if op[0] == ">" and self.has_nan:  # NaN sorts above v
-                    t |= np.isnan(x)
-            m = t if m is None else (m | t)
-        return m if self.ok is None else (m & self.ok[rows])
+    def rows(self, ranges: list) -> np.ndarray:
+        """The rows whose code lies in ``ranges``."""
+        parts = [self.perm[self.cum[lo] : self.cum[hi]] for lo, hi in ranges]
+        return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+    def within(self, ranges: list, rows: np.ndarray) -> np.ndarray:
+        """Which of ``rows`` have a code in ``ranges``."""
+        c = self.codes[rows]
+        if len(ranges) == 1:  # one unsigned compare: codes below lo wrap round
+            (lo, hi), t = ranges[0], c.dtype.type
+            return (c - t(lo)) < t(hi - lo)
+        hit = np.zeros(len(self.uniq) + 1, dtype=bool)
+        for lo, hi in ranges:
+            hit[lo:hi] = True
+        return hit[c]
 
 
-def _chunks(batches):
+def _code(arr, kind: str, scale: int) -> _Coded:
+    """Code one Arrow column of a chunk (see ``_column_kind`` for its view)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ok = arr.is_valid().to_numpy(zero_copy_only=False) if arr.null_count else None
+    strings = None
+    if kind == "str":  # ranks in the dictionary sorted in code-point order
+        enc = arr.dictionary_encode()
+        order = pc.array_sort_indices(enc.dictionary).to_numpy()
+        strings = enc.dictionary.to_numpy(zero_copy_only=False)[order]
+        rank = np.zeros(len(order) + 1, dtype=np.int64)  # NULL: the last entry
+        rank[order] = np.arange(len(order))
+        x = rank[enc.indices.fill_null(len(order)).to_numpy()]
+    elif pa.types.is_decimal(arr.type):
+        # precision <= 15: the low word of each 128-bit value holds it
+        words = np.frombuffer(arr.buffers()[1], dtype="<i8")
+        x = words[2 * arr.offset : 2 * (arr.offset + len(arr)) : 2]
+    elif pa.types.is_date(arr.type):
+        x = arr.cast(pa.int32()).fill_null(0).to_numpy().astype(np.int64) * _DAY_US
+    elif pa.types.is_timestamp(arr.type):
+        x = arr.cast(pa.timestamp("us", arr.type.tz)).cast(pa.int64()).fill_null(0).to_numpy()
+    else:
+        x = arr.cast(pa.float64() if kind == "float" else pa.int64()).fill_null(0).to_numpy()
+    if ok is None:
+        order = np.argsort(x)  # NaN sorts last
+    else:
+        valid = np.flatnonzero(ok)
+        order = valid[np.argsort(x[valid])]
+    s = x[order]
+    new = np.empty(len(s), dtype=bool)
+    new[:1] = True
+    np.not_equal(s[1:], s[:-1], out=new[1:])
+    if kind == "float":  # NaN is one value
+        new[1:] &= ~(np.isnan(s[1:]) & np.isnan(s[:-1]))
+    uniq = s[new]
+    codes = np.full(len(x), len(uniq), dtype=np.uint16 if len(uniq) < 1 << 16 else np.uint32)
+    codes[order] = np.cumsum(new) - 1
+    perm = order if ok is None else np.concatenate([order, np.flatnonzero(~ok)])
+    return _Coded(codes, uniq if strings is None else strings[uniq], scale, perm)
+
+
+def _chunks(batches, max_rows: int | None = None):
     """The partition's Arrow batches, read lazily, as lists of batches
-    holding at least ``CHUNK_ROWS`` rows or ``CHUNK_BYTES`` bytes (the last
+    holding at least ``max_rows`` rows or ``CHUNK_BYTES`` bytes (the last
     one may hold fewer)."""
     chunk, n, size = [], 0, 0
     for b in batches:
         chunk.append(b)
         n += b.num_rows
         size += b.nbytes
-        if n >= CHUNK_ROWS or size >= CHUNK_BYTES:
+        if (max_rows and n >= max_rows) or size >= CHUNK_BYTES:
             yield chunk, n
             chunk, n, size = [], 0, 0
     if n:
         yield chunk, n
 
 
-def _blobs(batches):
-    """One ``(rows, ipc)`` record per chunk of the partition: its row
-    count and its rows as one Arrow IPC stream of one record batch."""
+def _coded(chunk: list, kinds: list) -> list:
+    """A chunk's first ``len(kinds)`` columns, coded."""
+    import pyarrow as pa
+
+    return [_code(pa.concat_arrays([b.column(i) for b in chunk]), *kind) for i, kind in enumerate(kinds)]
+
+
+def _coded_rows(batches, kinds: list):
+    """The first batch's chunks ``(columns, rows)``: the partition's rows
+    in chunks of at least ``CHUNK_ROWS`` rows, each coded as it arrives."""
+    for chunk, n in _chunks(batches, CHUNK_ROWS):
+        yield _coded(chunk, kinds), n
+
+
+def _coded_blobs(batches, kinds: list):
+    """One ``(rows, ipc)`` record per chunk of the partition, as few as
+    ``CHUNK_BYTES`` allows: its row count and its coded columns as an
+    Arrow IPC stream of one record batch, one ``struct<code, perm>``
+    column per table column, whose ``code`` is dictionary-encoded over
+    ``uniq`` and a NULL entry."""
     import pyarrow as pa
 
     for chunk, n in _chunks(batches):
-        table = pa.Table.from_batches(chunk).combine_chunks()
+        arrays = []
+        for col, (kind, _) in zip(_coded(chunk, kinds), kinds):
+            uniq = pa.array(col.uniq, pa.string() if kind == "str" else None)
+            code = pa.DictionaryArray.from_arrays(col.codes, pa.concat_arrays([uniq, pa.nulls(1, uniq.type)]))
+            arrays.append(pa.StructArray.from_arrays([code, pa.array(col.perm.astype(np.int32))], ["code", "perm"]))
+        batch = pa.RecordBatch.from_arrays(arrays, names=chunk[0].schema.names[: len(kinds)])
         sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, table.schema) as writer:
-            writer.write_table(table)
+        with pa.ipc.new_stream(sink, batch.schema) as writer:
+            writer.write_batch(batch)
         yield pa.RecordBatch.from_arrays(
             [pa.array([n], pa.int64()), pa.array([sink.getvalue().to_pybytes()], pa.binary())], names=["rows", "ipc"]
         )
 
 
-def _count_chunk(batches: list, n: int, kinds: list, plans: list, counts: np.ndarray) -> None:
-    """Add every query's count over one chunk of ``n`` rows to ``counts``."""
-    import pyarrow as pa
-
-    cols = [_Column(pa.concat_arrays([b.column(i) for b in batches]), *kind) for i, kind in enumerate(kinds)]
-    sample = slice(0, n, max(1, n // SAMPLE_ROWS))
-    for qi, branches in enumerate(plans):
-        hits = []
-        for preds in branches:
-            if not preds:  # the branch filters no column: every row
-                hits = None
-                break
-            preds = [(cols[pos], cols[pos].localize(tests)) for pos, tests in preds]
-            preds.sort(key=lambda p: int(np.count_nonzero(p[0].match(p[1], sample))))
-            idx = None
-            for col, tests in preds:
-                m = col.match(tests, slice(None) if idx is None else idx)
-                idx = np.flatnonzero(m) if idx is None else idx[m]
-                if not len(idx):
-                    break
-            hits.append(idx)
-        if hits is None:
-            counts[qi] += n
-        elif len(hits) == 1:
-            counts[qi] += len(hits[0])
-        elif hits:
-            seen = np.zeros(n, dtype=bool)
-            for idx in hits:
-                seen[idx] = True
-            counts[qi] += np.count_nonzero(seen)
-
-
-def _read_blobs(batches, used: list):
-    """The chunks ``(batches, rows)`` of a partition of the chunk frame:
-    each blob read zero-copy and narrowed to the used columns."""
+def _read_coded(batches, used: list, kinds: list):
+    """The chunks ``(columns, rows)`` of a partition of the chunk frame:
+    each blob read zero-copy, narrowed to the used columns."""
     import pyarrow as pa
 
     for b in batches:
         for n, blob in zip(b.column("rows").to_pylist(), b.column("ipc")):
-            yield pa.ipc.open_stream(blob.as_buffer()).read_all().select(used).to_batches(), n
+            coded = pa.ipc.open_stream(blob.as_buffer()).read_next_batch()
+            cols = []
+            for name, (_, scale) in zip(used, kinds):
+                code, perm = coded.column(name).flatten()
+                uniq = code.dictionary.slice(0, len(code.dictionary) - 1).to_numpy(zero_copy_only=False)
+                cols.append(_Coded(code.indices.to_numpy(), uniq, scale, perm.to_numpy()))
+            yield cols, n
 
 
-def _partition_counts(chunks, kinds: list, plans: list):
+def _branch_rows(cols: list, n: int, preds: list, need_rows: bool):
+    """A branch's matches over one chunk: ``(count, rows)``, rows None when
+    every row matches or ``need_rows`` is false and one predicate is left.
+    The predicate with the fewest matches, known from the cumulative
+    counts, gives the candidate rows; each other one narrows them."""
+    terms = []
+    for pos, tests in preds:
+        col = cols[pos]
+        ranges = col.ranges(tests)
+        k = sum(int(col.cum[hi] - col.cum[lo]) for lo, hi in ranges)
+        if k == 0:
+            return 0, None
+        if k < n:  # k == n: the predicate holds on every row of the chunk
+            terms.append((k, col, ranges))
+    if not terms:
+        return n, None
+    terms.sort(key=lambda t: t[0])
+    k, col, ranges = terms[0]
+    if len(terms) == 1 and not need_rows:
+        return k, None
+    rows = col.rows(ranges)
+    for _, col, ranges in terms[1:]:
+        rows = rows[col.within(ranges, rows)]
+        if not len(rows):
+            break
+    return len(rows), rows
+
+
+def _partition_counts(chunks, plans: list):
     """One partition's count vector ``(q, n)`` over the compiled batch,
     counted chunk by chunk as ``chunks`` yields them. Chunks share no row,
     so their counts add up."""
     import pyarrow as pa
 
     counts, rows = np.zeros(len(plans), dtype=np.int64), 0
-    for chunk, n in chunks:
-        _count_chunk(chunk, n, kinds, plans, counts)
+    for cols, n in chunks:
         rows += n
+        for qi, branches in enumerate(plans):
+            hits = [_branch_rows(cols, n, preds, len(branches) > 1) for preds in branches]
+            live = [(k, r) for k, r in hits if k]
+            if len(live) == 1 or any(r is None for _, r in live):
+                counts[qi] += max(k for k, _ in live)
+            elif live:
+                seen = np.zeros(n, dtype=bool)
+                for _, r in live:
+                    seen[r] = True
+                counts[qi] += np.count_nonzero(seen)
     if rows:
         yield pa.RecordBatch.from_arrays(
             [pa.array(np.arange(len(plans), dtype=np.int32)), pa.array(counts)], names=["q", "n"]

@@ -3,6 +3,8 @@ t2 check shape: Spark result == DuckDB result on the same parquet."""
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from naru_spark.encoding import DictionaryEncoder
 from naru_spark.estimators import Const, Heuristic, Oracle, QueryRegionSize, Sampling, q_error
@@ -685,13 +687,13 @@ def _numpy_count(cols: dict, q) -> int:
 
 
 def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
-    """Spark-free: a partition's batches counted chunk by chunk as they
-    arrive, and built into chunk blobs and counted blob by blob, count
-    exactly what one whole-partition chunk and a plain numpy count do. The
-    builder reads its batches lazily, so no chunk holds more than
-    ``CHUNK_ROWS`` rows plus one input batch, and a small ``CHUNK_BYTES``
-    splits the chunks by bytes without changing a count."""
-    import pyarrow as pa
+    """Spark-free: a partition's batches coded and counted chunk by chunk
+    as they arrive (a first batch's row stream), and built into coded
+    chunk blobs and counted blob by blob, count exactly what one
+    whole-partition chunk and a plain numpy count do. Both read their
+    batches lazily, so no row-stream chunk holds more than ``CHUNK_ROWS``
+    rows plus one input batch, and a small ``CHUNK_BYTES`` splits the blobs
+    by bytes without changing a count."""
     from pyspark.sql import types as T
 
     from naru_spark.estimators import exact
@@ -710,33 +712,38 @@ def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
     used, kinds, plans = exact._compile(schema, queries)
     assert used == ["i", "d", "s"]
 
-    def build() -> tuple[list, list]:
-        """The blobs of the partition and their row counts, checking that
-        the builder reads no batch ahead of the chunk it yields."""
-        pulled, blobs, rows = [0], [], []
+    def lazily(chunks, rows_of) -> tuple[list, list]:
+        """Drain ``chunks(feed)`` with their row counts, checking that no
+        batch is read ahead of the chunk yielded."""
+        pulled, out, rows = [0], [], []
 
         def feed():
             for b in batches:
                 pulled[0] += b.num_rows
                 yield b
 
-        for blob in exact._blobs(feed()):
-            (r,) = blob.column("rows").to_pylist()
+        for chunk in chunks(feed()):
+            r = rows_of(chunk)
             assert pulled[0] == sum(rows) + r  # nothing read ahead
-            blobs.append(blob)
+            out.append(chunk)
             rows.append(r)
-        return blobs, rows
+        return out, rows
+
+    def build() -> tuple[list, list]:
+        return lazily(lambda feed: exact._coded_blobs(feed, kinds), lambda blob: blob.column("rows")[0].as_py())
 
     def counted(chunks) -> list:
-        (out,) = list(exact._partition_counts(chunks, kinds, plans))
+        (out,) = list(exact._partition_counts(chunks, plans))
         assert out.column(0).to_pylist() == list(range(len(queries)))
         return out.column(1).to_pylist()
 
-    blobs, evaluated = build()
-    chunked = counted(exact._read_blobs(iter(blobs), used))
-    assert counted(exact._chunks(iter(batches))) == chunked
+    stream, evaluated = lazily(lambda feed: exact._coded_rows(feed, kinds), lambda chunk: chunk[1])
+    chunked = counted(iter(stream))
     assert len(evaluated) == 3 and sum(evaluated) == n
     assert all(rows <= exact.CHUNK_ROWS + max(sizes) for rows in evaluated)
+    blobs, blob_rows = build()
+    assert blob_rows == [n]  # the whole partition fits one blob
+    assert counted(exact._read_coded(iter(blobs), used, kinds)) == chunked
 
     # NaN and NULL sit on both sides of every chunk boundary
     d, d_ok = cols["d"]
@@ -747,24 +754,144 @@ def test_counts_do_not_depend_on_chunk_boundaries(monkeypatch):
     s = cols["s"][0]
     assert not set(s[: evaluated[0]]) & set(s[-evaluated[-1]:])
 
-    whole = np.zeros(len(queries), dtype=np.int64)
-    exact._count_chunk(batches, n, kinds, plans, whole)
-    assert chunked == whole.tolist() == [_numpy_count(cols, q) for q in queries]
+    whole = counted(iter([(exact._coded(batches, kinds), n)]))
+    assert chunked == whole == [_numpy_count(cols, q) for q in queries]
     assert all(0 < c < n for c in chunked[:10])  # the queries are selective
-    assert list(exact._blobs(iter([]))) == []
-    assert list(exact._partition_counts(exact._read_blobs(iter([]), used), kinds, plans)) == []
-    assert list(exact._partition_counts(exact._chunks(iter([])), kinds, plans)) == []
+    assert list(exact._coded_blobs(iter([]), kinds)) == []
+    assert list(exact._partition_counts(exact._read_coded(iter([]), used, kinds), plans)) == []
+    assert list(exact._partition_counts(exact._coded_rows(iter([]), kinds), plans)) == []
 
-    # a byte cap of an eighth of the partition splits it into more chunks
+    # a byte cap of an eighth of the partition splits it into more blobs,
+    # each over consecutive batches holding at most the cap plus one batch
     cap = sum(b.nbytes for b in batches) // 8
     monkeypatch.setattr(exact, "CHUNK_BYTES", cap)
     blobs, by_bytes = build()
     assert len(by_bytes) > len(evaluated) and sum(by_bytes) == n
-    for blob in blobs:
-        table = pa.ipc.open_stream(blob.column("ipc")[0].as_buffer()).read_all()
-        assert table.nbytes <= cap + max(b.nbytes for b in batches)
-    assert counted(exact._read_blobs(iter(blobs), used)) == chunked
-    assert counted(exact._chunks(iter(batches))) == chunked
+    ends = set(np.cumsum(sizes).tolist())
+    start = 0
+    for rows in by_bytes:
+        assert start + rows in ends
+        size = sum(b.nbytes for b, first in zip(batches, np.cumsum([0] + sizes[:-1])) if start <= first < start + rows)
+        assert size <= cap + max(b.nbytes for b in batches)
+        start += rows
+    assert counted(exact._read_coded(iter(blobs), used, kinds)) == chunked
+    assert counted(exact._coded_rows(iter(batches), kinds)) == chunked
+
+
+_NAN, _INF = float("nan"), float("inf")
+_T0 = 1_600_000_000_000_000  # 2020-09-13 12:26:40 UTC in microseconds
+_DOUBLE_EDGES = [_NAN, _INF, -_INF, 1e-05, 1e20, 2**70, -0.0]
+
+
+@st.composite
+def _coded_case(draw):
+    """A random table of every column kind the counter codes, each with
+    NULL, split into random batches, and random conjunctions and
+    disjunctions whose literals are in the domain, on its boundaries,
+    outside it, or DOUBLE-parsed edge values (NaN, +-inf, 1e-05, 1e20)."""
+    from datetime import datetime, timezone
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from naru_spark.predicates import DisjunctiveQuery
+
+    n = draw(st.integers(1, 120))
+
+    def column(values):
+        return draw(st.lists(st.one_of(st.none(), values), min_size=n, max_size=n))
+
+    raw = {
+        "i": column(st.integers(-3, 3)),
+        "dec": column(st.integers(-300, 300)),  # unscaled DECIMAL(10, 2)
+        "d": column(st.sampled_from([_NAN, _INF, -_INF, -0.0, 0.0, 1.5, -2.25, 3.0, 1e-05])),
+        "s": column(st.sampled_from(["", "a", "ab", "b", "é", "z"])),
+        "t": column(st.integers(-3, 3).map(lambda k: _T0 + k * 1_000_000)),
+    }
+    arrow = {
+        "i": pa.array(raw["i"], pa.int64()),
+        "dec": pa.array([None if u is None else Decimal(u).scaleb(-2) for u in raw["dec"]], pa.decimal128(10, 2)),
+        "d": pa.array(raw["d"], pa.float64()),
+        "s": pa.array(raw["s"], pa.string()),
+        "t": pa.array(raw["t"], pa.timestamp("us", tz="UTC")),
+    }
+    fill = {"i": 0, "dec": 0, "d": 0.0, "s": "", "t": 0}
+    # the reference compares exact columns as doubles: exact here, as every
+    # value and every literal of them has few digits
+    ref = {
+        c: (
+            np.array([fill[c] if v is None else v for v in vals], dtype=object if c == "s" else None),
+            np.array([v is not None for v in vals]),
+        )
+        for c, vals in raw.items()
+    }
+    ref["i"] = (ref["i"][0].astype(np.float64), ref["i"][1])
+    ref["dec"] = (ref["dec"][0] / 100, ref["dec"][1])
+    ref["t"] = (ref["t"][0].astype("datetime64[us]"), ref["t"][1])
+
+    def when(us: int) -> datetime:
+        return datetime.fromtimestamp(us / 1e6, timezone.utc).replace(tzinfo=None)
+
+    present = {c: [v for v in vals if v is not None] for c, vals in raw.items()}
+    literal = {
+        "i": st.sampled_from(present["i"] or [0]) | st.sampled_from([-4, 4, 100, 2.5, -0.5, 2**70, -(2**70)]),
+        "dec": st.sampled_from([u / 100 for u in present["dec"]] or [0.0]).flatmap(
+            lambda f: st.sampled_from([f, round(f + 0.01, 2), round(f - 0.01, 2), f + 0.005])
+        ) | st.sampled_from([3.01, -3.01, 0, 2, 2**70]),
+        "d": st.sampled_from(present["d"] or [0.0]) | st.sampled_from([0.5, -3.0, 1.5000001, 4.0]),
+        # "a " stands just above "a": numpy drops the trailing NUL of "a\x00"
+        "s": st.sampled_from(present["s"] or [""]) | st.sampled_from(["", "a ", "aa", "ba", "zz", "\uffff"]),
+        "t": st.sampled_from(present["t"] or [_T0]).flatmap(lambda us: st.sampled_from([us, us - 1, us + 1]))
+        .map(when) | st.sampled_from([when(_T0 - 10**12), when(_T0 + 10**12)]),
+    }
+    for c in ("i", "dec", "d"):
+        literal[c] = literal[c] | st.sampled_from(_DOUBLE_EDGES)
+    literal = {c: st.none() | lit for c, lit in literal.items()}
+    ops = st.sampled_from(["=", "<", "<=", ">", ">=", "in"])
+
+    @st.composite
+    def conjunction(draw, min_size):
+        k = draw(st.integers(min_size, 4))
+        cols = [draw(st.sampled_from(list(raw))) for _ in range(k)]
+        preds = [(c, draw(ops)) for c in cols]
+        vals = [draw(st.lists(literal[c], min_size=1, max_size=3)) if op == "in" else draw(literal[c]) for c, op in preds]
+        return Query("t", cols, [op for _, op in preds], vals)
+
+    queries = draw(st.lists(
+        conjunction(1) | st.lists(conjunction(0), min_size=2, max_size=3).map(lambda bs: DisjunctiveQuery("t", bs)),
+        min_size=1, max_size=6,
+    ))
+    cuts = sorted(draw(st.lists(st.integers(0, n), max_size=3)))
+    table = pa.RecordBatch.from_arrays(list(arrow.values()), names=list(arrow))
+    batches = [table.slice(a, b - a) for a, b in zip([0] + cuts, cuts + [n])]
+    return ref, batches, queries
+
+
+@settings(max_examples=150, deadline=None)
+@given(_coded_case())
+def test_coded_counts_match_numpy(case):
+    """Spark-free: the counter over coded chunks (the row stream's and the
+    chunk frame's blobs) equals an elementwise numpy count, whatever the
+    column kinds, NULL, NaN, +-inf, -0.0, literals and chunk boundaries."""
+    from pyspark.sql import types as T
+
+    from naru_spark.estimators import exact
+
+    ref, batches, queries = case
+    schema = T.StructType([
+        T.StructField("i", T.LongType()), T.StructField("dec", T.DecimalType(10, 2)),
+        T.StructField("d", T.DoubleType()), T.StructField("s", T.StringType()), T.StructField("t", T.TimestampType()),
+    ])
+    used, kinds, plans = exact._compile(schema, queries)
+    all_kinds = [exact._column_kind(f.dataType) for f in schema.fields]
+
+    def counted(chunks) -> list:
+        out = list(exact._partition_counts(chunks, plans))
+        return out[0].column(1).to_pylist() if out else []
+
+    rows = counted((exact._coded([b.select(used)], kinds), b.num_rows) for b in batches if b.num_rows)
+    blobs = counted(exact._read_coded(exact._coded_blobs(iter(batches), all_kinds), used, kinds))
+    assert rows == blobs == [_numpy_count(ref, q) for q in queries]
 
 
 def test_oracle_counts_one_partition_larger_than_a_chunk(spark):
@@ -805,8 +932,11 @@ def test_oracle_counts_one_partition_larger_than_a_chunk(spark):
     truths = [df.filter(spark_where(q)).count() for q in batch]
     oracle = Oracle(df)
     assert all(truths) and oracle.query_batch(batch) == truths
-    # the chunks of the one source partition are spread over the cores
-    assert oracle.counts.chunks().select(F.spark_partition_id()).distinct().count() >= 2
+    # the rows of the one source partition are dealt evenly over the cores:
+    # a row-level round-robin from one partition leaves at most 1 row apart
+    per_part = oracle.counts.chunks().groupBy(F.spark_partition_id()).agg(F.sum("rows")).collect()
+    spread = [r[1] for r in per_part]
+    assert len(spread) >= 2 and sum(spread) == df.count() and max(spread) - min(spread) <= 1
     assert oracle.query_batch(batch) == truths
 
 
